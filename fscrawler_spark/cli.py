@@ -1,16 +1,29 @@
-"""CLI entry point — the FsCrawlerCli analog.
+"""CLI entry point — the FsCrawlerCli analog, declared as one verb table.
 
-Reference: /root/reference/cli/.../FsCrawlerCli.java:96-140 (--loop,
---restart, job dir). Here a crawl "job" is one spark-submit invocation:
+Reference: FsCrawlerCli.java:96-140 (--loop, --restart, job dir). Here a
+crawl "job" is one spark-submit invocation:
 
     spark-submit --py-files fscrawler_spark.zip -m fscrawler_spark.cli \\
         --input /data/transcripts --output /data/extracted \\
         [--loop N] [--restart] [--indexed-chars 100000] ...
 
---restart clears the checkpoint manifest (full re-scan, the reference's
---restart semantics); --loop N repeats the scan N times (update_rate
-analog; each loop is incremental via the checkpoint — already-completed
-buckets are skipped unless --restart).
+--restart clears the checkpoint manifest (full re-scan); --loop N
+repeats the scan N times, each loop incremental via the checkpoint.
+
+Every other mode is a verb. VERBS declares each verb once: its selector
+flag, the flags it owns or borrows, the range checks on them, the verbs
+it may run with, whether it reads --input and needs a SparkSession, and
+its runner. validate() derives every "requires", range and "cannot
+combine" error from that table before any JVM starts or table opens;
+main() then runs the one selected runner.
+
+One verb per invocation. The companion sets are the only exceptions: a
+crawl or an --incremental tick with --near-dup and/or --assemble-store
+(the store ticks run after each loop), and the two store ticks together
+(standalone, on --output alone). --dry-run reads --incremental as a
+modifier (a preview of the tick), not as a second verb. No verb flag
+means a crawl, and so does --input, --restart, --publish-table, --loop
+or --update-rate that the running verb does not read.
 """
 
 from __future__ import annotations
@@ -19,6 +32,9 @@ import argparse
 import json
 import os
 import sys
+import time
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -775,6 +791,13 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+class CliError(Exception):
+    """A usage or input error: main() prints it and exits 2."""
+
+
+# --- shared helpers ---------------------------------------------------------
+
+
 def _view_transform(vf, vs, keys):
     """The --view-filter/--view-select grammar as a sync transform —
     ONE definition shared by --sync-derived and --sync-dag so the two
@@ -798,18 +821,21 @@ def _view_transform(vf, vs, keys):
     return transform
 
 
-def _read_docs_table(spark, input_path: str):
-    """Load the docs table behind a curation verb's --input: an
-    extraction output root, its docs/ dir directly, or a SNAPSHOT TABLE
-    — `snap:ROOT[@N|@TAG]` or a bare root holding `_snap/` (e.g. a
+def _read_docs_table(spark, input_path: str, flag: str | None = None):
+    """Load the docs table behind a curation verb's --input (or a
+    secondary table such as --dsir-target, named by ``flag`` in errors):
+    an extraction output root, its docs/ dir directly, or a SNAPSHOT
+    TABLE — `snap:ROOT[@N|@TAG]` or a bare root holding `_snap/` (e.g. a
     --publish-table target), read with snapshot isolation so a curation
     pass over a table live ticks keep publishing to sees ONE consistent
     snapshot; `@N` time-travels, `@TAG` resolves a named tag (a TAG
     suffix is only honored when ROOT is a snapshot table carrying that
-    tag, so roots containing '@' stay addressable). Returns
-    (DataFrame, None) or (None, error-message)."""
+    tag, so roots containing '@' stay addressable). Raises CliError."""
     from fscrawler_spark.plans.snapshot_table import SNAP_DIR, _TAG_RE, SnapshotTable
     from fscrawler_spark.sources.transcripts import parse_snap_input
+
+    def fail(msg):
+        return CliError(f"{flag}: {msg}" if flag else msg)
 
     snap_root = sid = None
     if input_path.startswith("snap:"):
@@ -829,44 +855,432 @@ def _read_docs_table(spark, input_path: str):
                     try:
                         snap_root, sid = root, t0.resolve_tag(suffix)
                     except (FileNotFoundError, ValueError) as e:
-                        # missing tag OR a torn tag file: clean message,
-                        # the curation verbs' exit-2 contract
-                        return None, str(e)
+                        # missing tag OR a torn tag file
+                        raise fail(str(e)) from None
     elif os.path.isdir(os.path.join(input_path, SNAP_DIR)):
         snap_root = input_path
     if snap_root is not None:
         t = SnapshotTable(snap_root)
         if not t.exists():
-            return None, f"no snapshot table at {snap_root}"
+            raise fail(f"no snapshot table at {snap_root}")
         try:
             docs = t.read(spark, snapshot_id=sid)
         except FileNotFoundError as e:
-            return None, str(e)
-        if "doc_id" not in docs.columns or "extracted" not in docs.columns:
-            return None, (
-                f"snapshot table {snap_root} is not an extraction docs table "
-                f"(needs doc_id + extracted; has {docs.columns})"
-            )
-        return docs, None
-    docs_path = input_path
-    sub = os.path.join(input_path, "docs")
-    if os.path.isdir(sub):
-        docs_path = sub
-    try:
-        docs = spark.read.parquet(docs_path)
-    except Exception as e:
-        return None, f"cannot read docs table at {docs_path}: {e}"
+            raise fail(str(e)) from None
+        where = f"snapshot table {snap_root}"
+    else:
+        where = input_path
+        sub = os.path.join(input_path, "docs")
+        if os.path.isdir(sub):
+            where = sub
+        try:
+            docs = spark.read.parquet(where)
+        except Exception as e:
+            raise fail(f"cannot read docs table at {where}: {e}") from None
     if "doc_id" not in docs.columns or "extracted" not in docs.columns:
-        return None, (
-            f"{docs_path} is not an extraction docs table "
+        raise fail(
+            f"{where} is not an extraction docs table "
             f"(needs doc_id + extracted; has {docs.columns})"
         )
-    return docs, None
+    return docs
 
 
-def _run_quality_filter(
-    spark, docs, args, verb: str, flags_col, keep_cols=None, extra_stats=None
-) -> int:
+def _doc_order(df) -> list[str]:
+    """The stable row order curated tables are written in."""
+    return [c for c in ("conv_id", "turn_idx") if c in df.columns] or ["doc_id"]
+
+
+def _write(spark, df, path: str, order=None):
+    """Overwrite ``path`` with ``df`` sorted within partitions by
+    ``order`` (default: _doc_order) for stable listings; return the
+    written table read back."""
+    df.sortWithinPartitions(*(order or _doc_order(df))).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _open_table(args):
+    """The snapshot table at --output, which must exist."""
+    from fscrawler_spark.plans.snapshot_table import SnapshotTable
+
+    t = SnapshotTable(args.output)
+    if not t.exists():
+        raise CliError(f"no snapshot table at {args.output}")
+    return t
+
+
+def _table_keys(args) -> tuple[str, ...]:
+    return tuple(k.strip() for k in args.table_keys.split(",") if k.strip())
+
+
+def _settings(args):
+    """ExtractSettings from the shared extraction flags. A bad value —
+    type or range, ExtractSettings validates every numeric knob — is a
+    usage error, never a traceback."""
+    from fscrawler_spark.config import (
+        DEFAULT_INDEXED_CHARS,
+        ExtractSettings,
+        parse_byte_size,
+        parse_percentage,
+    )
+
+    try:
+        ic = str(args.indexed_chars).strip()
+        ic_percent = parse_percentage(ic) if ic.endswith("%") else None
+        return ExtractSettings(
+            indexed_chars=int(ic) if ic_percent is None else DEFAULT_INDEXED_CHARS,
+            indexed_chars_percent=ic_percent,
+            ignore_above=parse_byte_size(args.ignore_above),
+            includes=tuple(args.includes),
+            excludes=tuple(args.excludes),
+            filters=tuple(args.filters),
+            num_buckets=args.num_buckets,
+            skew_salt=args.skew_salt,
+            lang_detect=args.lang_detect,
+            store_source=args.store_source,
+        )
+    except ValueError as e:
+        raise CliError(f"invalid argument value: {e}") from None
+
+
+# --- value checks: check(flag, value, args) raises CliError; a check that
+# parses the value returns the parsed form, which validate() stores in place
+# of the raw string so the runner never parses it again ----------------------
+
+
+def _min(lo):
+    def check(flag, v, args):
+        if v < lo:
+            raise CliError(f"{flag} must be >= {lo}, got {v}")
+
+    return check
+
+
+def _within(lo, hi, label=None):
+    def check(flag, v, args):
+        if not lo <= v <= hi:
+            raise CliError(f"{label or flag} must be in [{lo}, {hi}], got {v}")
+
+    return check
+
+
+def _similarity(flag, v, args):
+    if not 0.0 < v <= 1.0:
+        raise CliError(f"{flag} SIM must be in (0, 1], got {v}")
+
+
+def _stride(flag, v, args):
+    if not 1 <= v <= args.chunk:
+        raise CliError(
+            f"--chunk-stride must be in [1, --chunk={args.chunk}], got {v} "
+            "(a stride past the window drops tokens)"
+        )
+
+
+def _update_rate(flag, v, args):
+    from fscrawler_spark.config import parse_time_value
+
+    try:
+        sleep_s = parse_time_value(v)
+    except ValueError as e:
+        raise CliError(f"invalid argument value: {e}") from None
+    if sleep_s < 0:
+        raise CliError(f"--update-rate must be >= 0, got {v!r}")
+    return sleep_s
+
+
+def _named_keys(flag, v, args):
+    if not _table_keys(args):
+        raise CliError(f"--table-keys must name at least one column (got {v!r})")
+
+
+def _sync_keys(flag, v, args):
+    if v.strip().lower() == "none":
+        raise CliError(
+            "--table-keys none is the raw file-level stream sentinel for "
+            "--table-changes; a derived-table sync is keyed — name real "
+            "key columns (default conv_id,turn_idx)"
+        )
+    _named_keys(flag, v, args)
+
+
+_CHANGES_GRAMMAR = "--table-changes wants FROM[:TO] snapshot ids or tag names, got {!r}"
+
+
+def _changes_range(flag, v, args):
+    # arity BEFORE tag resolution, so '1:2:3' (or 'v2:x:3') gets the
+    # grammar error, not a misleading tag lookup
+    if len(v.split(":")) > 2:
+        raise CliError(_CHANGES_GRAMMAR.format(v))
+
+
+def _mix_rates(text: str) -> dict[str, float]:
+    """'GROUP=RATE[,GROUP=RATE...]' -> {group: rate}; rate ranges
+    (negative, inf, sub-resolution) are mixing._split_rate's to refuse."""
+    rates = {}
+    for part in text.split(","):
+        name, sep, val = part.partition("=")
+        try:
+            if not sep or not name.strip():
+                raise ValueError(part)
+            rates[name.strip()] = float(val)
+        except ValueError:
+            raise CliError(
+                f"--mix expects GROUP=RATE[,GROUP=RATE...], got {part!r}"
+            ) from None
+    return rates
+
+
+def _ppl_keep(text: str) -> list[str]:
+    keep = [b.strip() for b in text.split(",") if b.strip()]
+    if not keep or any(b not in ("head", "middle", "tail") for b in keep):
+        raise CliError(f"--ppl-filter takes a comma list of head/middle/tail, got {text!r}")
+    return keep
+
+
+def _ppl_cuts(text: str) -> tuple[float, float]:
+    try:
+        lo, hi = (float(x) for x in text.split(","))
+    except ValueError:
+        raise CliError(f"--ppl-cuts must be 'LO,HI' floats, got {text!r}") from None
+    if not 0.0 < lo < hi < 1.0:
+        raise CliError(f"--ppl-cuts must satisfy 0 < LO < HI < 1, got {lo},{hi}")
+    return lo, hi
+
+
+def _pii_kinds(text: str) -> tuple[str, ...]:
+    from fscrawler_spark.functions.curation import PII_PATTERNS
+
+    known = {k for k, _p, _t in PII_PATTERNS}
+    bad = [k for k in text.split(",") if k not in known]
+    if bad:
+        raise CliError(f"unknown --pii-kinds {bad}; known: {sorted(known)}")
+    return tuple(text.split(","))
+
+
+def _is_str_list(x) -> bool:
+    return isinstance(x, list) and all(isinstance(s, str) for s in x)
+
+
+def _dag_spec(args):
+    """The --sync-dag SPEC_JSON as (upstream root, default keys, views);
+    relative roots resolve against --output, so one spec file drives
+    any deployment directory."""
+
+    def rel(p: str) -> str:
+        return p if os.path.isabs(p) else os.path.join(args.output, p)
+
+    try:
+        with open(args.sync_dag) as f:
+            spec = json.load(f)
+    except (OSError, json.JSONDecodeError) as e:
+        raise CliError(f"cannot read --sync-dag spec: {e}") from None
+    up = spec.get("upstream") if isinstance(spec, dict) else None
+    views_spec = spec.get("views") if isinstance(spec, dict) else None
+    if not isinstance(up, str) or not isinstance(views_spec, list) or not views_spec:
+        raise CliError('--sync-dag spec must be {"upstream": ROOT, "views": [{...}, ...]}')
+    keys = _table_keys(args)
+    views = []
+    for v in views_spec:
+        if not isinstance(v, dict):
+            raise CliError(f"--sync-dag views must be objects, got {v!r}")
+        name, vf, vs, vk = v.get("name"), v.get("filter"), v.get("select"), v.get("keys")
+        if vf is not None and not isinstance(vf, str):
+            raise CliError(
+                f"view {name!r}: 'filter' must be a SQL expression string, got {vf!r}"
+            )
+        if vs is not None and not _is_str_list(vs):
+            raise CliError(f"view {name!r}: 'select' must be a list of SQL expression strings")
+        if vk is not None and not _is_str_list(vk):
+            # a bare string would be iterated per-CHARACTER as key columns
+            raise CliError(f"view {name!r}: 'keys' must be a list of column names, got {vk!r}")
+        vkeys = vk if vk is not None else keys
+        views.append({
+            "name": name,
+            "root": rel(str(v["root"])) if v.get("root") else v.get("root"),
+            "upstream": v.get("upstream"),
+            "keys": vkeys,
+            "transform": _view_transform(vf, vs, vkeys),
+        })
+    return rel(up), keys, views
+
+
+# --- runners: run(spark, args, docs) -> exit code ---------------------------
+# ``docs`` is the --input docs table for verbs declared input="docs",
+# else None; ``spark`` is None for sessionless verbs.
+
+
+def _run_status(_spark, args, _docs):
+    from fscrawler_spark.plans.pipeline import job_status
+
+    print(json.dumps(job_status(args.output)))
+    return 0
+
+
+def _run_pause(_spark, args, _docs):
+    """--pause / --resume-paused: set or clear the pause request."""
+    from fscrawler_spark.plans.pipeline import clear_pause, request_pause
+
+    (request_pause if args.pause else clear_pause)(args.output)
+    print(json.dumps({"pause_requested": args.pause}))
+    return 0
+
+
+def _run_table_history(_spark, args, _docs):
+    t = _open_table(args)
+    expired = (
+        [] if args.table_expire is None
+        else t.expire_unreferenced(keep_snapshots=args.table_expire)
+    )
+    print(json.dumps({
+        "root": args.output,
+        "current": t.current_id(),
+        "tags": t.tags(),
+        "history": t.history(),
+        "expired_files": expired,
+    }))
+    return 0
+
+
+def _run_table_vacuum(_spark, args, _docs):
+    removed = _open_table(args).remove_orphans(older_than_s=args.table_vacuum)
+    print(json.dumps({"root": args.output, "removed_orphans": removed}))
+    return 0
+
+
+def _run_table_tag(_spark, args, _docs):
+    t = _open_table(args)
+    name, sep, suffix = args.table_tag.rpartition("@")
+    if not (sep and suffix.isdigit()):
+        name, suffix = args.table_tag, None
+    sid = t.tag(name, None if suffix is None else int(suffix), force=args.tag_force)
+    print(json.dumps({"root": args.output, "tag": name, "snapshot_id": sid}))
+    return 0
+
+
+def _run_table_drop_tag(_spark, args, _docs):
+    sid = _open_table(args).drop_tag(args.table_drop_tag)
+    print(json.dumps({
+        "root": args.output, "dropped_tag": args.table_drop_tag, "was_snapshot": sid,
+    }))
+    return 0
+
+
+def _run_table_rollback(_spark, args, _docs):
+    # metadata-only commit: rollback never touches data files or Spark
+    sid = _open_table(args).rollback(None, args.table_rollback)
+    print(json.dumps({
+        "root": args.output, "rolled_back_to": args.table_rollback, "new_snapshot": sid,
+    }))
+    return 0
+
+
+def _run_table_compact(spark, args, _docs):
+    res = _open_table(args).compact(spark, target_file_bytes=args.table_compact * 1024 * 1024)
+    print(json.dumps({**res, "operation": "compact"}))
+    return 0
+
+
+def _run_table_changes(spark, args, _docs):
+    t = _open_table(args)
+    spec = args.table_changes.split(":")
+
+    def bound(s):
+        # a snapshot id or a TAG name ("what changed between train-v2 and
+        # train-v3"); tags start with a letter so the grammar is unambiguous
+        if s.isdigit():
+            return int(s)
+        try:
+            return t.resolve_tag(s)
+        except ValueError as e:
+            if "torn" in str(e):
+                raise
+            raise CliError(_CHANGES_GRAMMAR.format(args.table_changes)) from None
+
+    from_id = bound(spec[0])
+    # resolve "current" ONCE so the printed bound is the one read
+    to_id = bound(spec[1]) if len(spec) > 1 and spec[1] else t.current_id()
+    keys = None if args.table_keys.strip().lower() in ("", "none") else _table_keys(args)
+    ch = t.read_changes(spark, from_id, to_id, keys=keys)
+    if args.changes_out is not None:
+        ch = _write(spark, ch, args.changes_out, list(keys) if keys else ["_change_type"])
+    counts = {r["_change_type"]: r["count"] for r in ch.groupBy("_change_type").count().collect()}
+    print(json.dumps({
+        "operation": "changes",
+        "from_snapshot": from_id,
+        "to_snapshot": to_id,
+        "counts": counts,
+        "rows": sum(counts.values()),
+        "out": args.changes_out,
+    }))
+    return 0
+
+
+def _run_table_upsert(spark, args, _docs):
+    t = _open_table(args)
+    res = t.upsert(spark, spark.read.parquet(args.table_upsert), keys=_table_keys(args))
+    print(json.dumps({**res, "operation": "upsert"}))
+    return 0
+
+
+def _run_table_delete(spark, args, _docs):
+    t = _open_table(args)
+    res = t.delete_rows(spark, spark.read.parquet(args.table_delete), keys=_table_keys(args))
+    print(json.dumps({**res, "operation": "delete"}))
+    return 0
+
+
+def _repeat_sync(args, sync_once):
+    """--loop N --update-rate T on a sync = continuous view maintenance
+    (the crawl loop's analog for the derived tier): one JSON line per
+    pass; --force-bootstrap rebuilds on the FIRST pass only."""
+    sleep_s = args.update_rate
+    for i in range(args.loop):
+        print(json.dumps({**sync_once(args.force_bootstrap and i == 0), "loop": i + 1}))
+        if sleep_s and i + 1 < args.loop:
+            time.sleep(sleep_s)
+    return 0
+
+
+def _run_sync_derived(spark, args, _docs):
+    from fscrawler_spark.plans.derived import sync_derived_table
+
+    keys = _table_keys(args)
+    transform = _view_transform(args.view_filter, args.view_select, keys)
+    return _repeat_sync(args, lambda force: {
+        **sync_derived_table(
+            spark, args.sync_derived, args.output,
+            transform=transform, keys=keys, force_bootstrap=force,
+        ),
+        "operation": "sync-derived",
+    })
+
+
+def _run_sync_dag(spark, args, _docs):
+    from fscrawler_spark.plans.derived import sync_view_dag
+
+    up, keys, views = args.sync_dag
+    return _repeat_sync(args, lambda force: {
+        "operation": "sync-dag",
+        "views": sync_view_dag(spark, up, views, keys=keys, force_bootstrap=force),
+    })
+
+
+def _run_doctor(spark, args, _docs):
+    from fscrawler_spark.plans.doctor import check_output
+
+    res = check_output(spark, args.output)
+    print(json.dumps(res))
+    return 0 if res["ok"] else 3
+
+
+def _run_compact(spark, args, _docs):
+    from fscrawler_spark.streaming.micro_batch import compact_streaming_output
+
+    print(json.dumps(compact_streaming_output(spark, args.input, args.output, args.settings)))
+    return 0
+
+
+def _run_page_gate(spark, args, docs, verb: str, flags_col, keep_cols=None, extra_stats=None):
     """Shared drive for the page-gate verbs (--c4-filter /
     --gopher-filter): flag -> per-reason drop audit -> write survivors in
     deterministic order -> one JSON stats line. Variable parts: the
@@ -887,16 +1301,8 @@ def _run_quality_filter(
     out = flagged.filter(F.col("_q.passes"))
     if keep_cols is not None:
         out = keep_cols(out)
-    out = out.drop("_q")
-    order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-    out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-    written = spark.read.parquet(args.output)
-    stats = {
-        verb: True,
-        "total": total,
-        "kept": written.count(),
-        "dropped_by_reason": dropped_by,
-    }
+    written = _write(spark, out.drop("_q"), args.output)
+    stats = {verb: True, "total": total, "kept": written.count(), "dropped_by_reason": dropped_by}
     if extra_stats is not None:
         stats.update(extra_stats(written))
     stats["output"] = args.output
@@ -904,678 +1310,1000 @@ def _run_quality_filter(
     return 0
 
 
+def _run_c4_filter(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.curation import c4_quality_flags
+
+    min_sentences = 3 if args.c4_min_sentences is None else args.c4_min_sentences
+
+    def swap_in_cleaned(out):
+        return out.withColumn("extracted", F.col("_q.cleaned_text")).withColumn(
+            "c4_lines_removed", F.col("_q.n_lines") - F.col("_q.n_lines_kept")
+        )
+
+    def lines_removed(written):
+        n = written.agg(F.sum("c4_lines_removed")).collect()[0][0] or 0
+        return {"lines_removed_in_kept": int(n)}
+
+    # re-filtering a previous --c4-filter output: drop its stale audit
+    # column before re-attaching
+    return _run_page_gate(
+        spark, args, docs.drop("c4_lines_removed"), "c4_filter",
+        c4_quality_flags("extracted", min_sentences=min_sentences),
+        keep_cols=swap_in_cleaned, extra_stats=lines_removed,
+    )
+
+
+def _run_gopher_filter(spark, args, docs):
+    from fscrawler_spark.functions.curation import gopher_quality_flags
+
+    return _run_page_gate(spark, args, docs, "gopher_filter", gopher_quality_flags("extracted"))
+
+
+def _run_dedup_lines(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.curation import strip_repeated_lines
+
+    curated = strip_repeated_lines(
+        docs, id_col="doc_id", text_col="extracted", min_docs=args.dedup_lines
+    ).withColumnsRenamed({"id": "doc_id", "text": "extracted"})
+    # keep the full original row; only `extracted` is replaced
+    written = _write(spark, docs.drop("extracted").join(curated, "doc_id"), args.output)
+    removed = written.agg(F.sum("removed_lines")).collect()[0][0] or 0
+    print(json.dumps({
+        "dedup_lines": args.dedup_lines,
+        "docs": written.count(),
+        "removed_lines_total": int(removed),
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_clean_text(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.normalize import clean_text, mojibake_score
+
+    out = docs.withColumn("moji_before", mojibake_score(F.col("extracted"))).withColumn(
+        "extracted", clean_text(F.col("extracted"))
+    )
+    stats = _write(spark, out, args.output).agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("moji_before").alias("moji"),
+        F.sum(mojibake_score(F.col("extracted"))).alias("moji_after"),
+    ).collect()[0]
+    print(json.dumps({
+        "clean_text": True,
+        "docs": stats["docs"],
+        "mojibake_before": int(stats["moji"] or 0),
+        "mojibake_after": int(stats["moji_after"] or 0),
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_report(spark, args, docs):
+    from fscrawler_spark.plans.report import corpus_report
+
+    group = args.report_group or "mime"
+    corpus_report(docs, group_col=group).orderBy("group").write.mode("overwrite").parquet(
+        args.output
+    )
+    rows = [r.asDict() for r in spark.read.parquet(args.output).orderBy("group").collect()]
+    print(json.dumps({
+        "report": True,
+        "group_col": group,
+        "groups": len(rows) - 1,  # minus the <all> row
+        "rows": rows,
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_export(spark, args, docs):
+    from fscrawler_spark.functions.export import export_shards, verify_export
+
+    if args.export_curriculum is not None and args.export_curriculum not in docs.columns:
+        raise CliError(
+            f"--export-curriculum column {args.export_curriculum!r} not on the docs table"
+        )
+    stats = export_shards(
+        docs, args.output, n_shards=args.export,
+        id_col="doc_id", seed=args.export_seed, text_col="extracted",
+        fmt=args.export_format, stage_col=args.export_curriculum,
+    )
+    problems = verify_export(spark, args.output)
+    print(json.dumps({
+        "export": True,
+        "shards": stats["shards"],
+        "rows": stats["rows"],
+        "seed": args.export_seed,
+        "format": args.export_format,
+        "curriculum": args.export_curriculum,
+        "verify_findings": problems,
+        "output": args.output,
+    }))
+    return 0 if not problems else 1
+
+
+def _run_dedup_spans(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.exact_substr import strip_duplicate_spans
+
+    before = docs.select(F.sum(F.length("extracted"))).collect()[0][0] or 0
+    out = strip_duplicate_spans(
+        docs, id_col="doc_id", text_col="extracted",
+        min_len=args.dedup_spans, cross_doc_only=True,
+    )
+    written = _write(spark, out, args.output)
+    after = written.select(F.sum(F.length("extracted"))).collect()[0][0] or 0
+    print(json.dumps({
+        "dedup_spans": args.dedup_spans,
+        "docs": written.count(),
+        "chars_removed": int(before - after),
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_mix(spark, args, docs):
+    """--mix (explicit per-group rates) and --mix-budget (rates computed
+    to hit a token budget) — one runner, one output contract."""
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions import mixing
+
+    if args.mix_group not in docs.columns:
+        raise CliError(
+            f"--mix-group column {args.mix_group!r} not in docs table (has {docs.columns})"
+        )
+    if args.mix is not None:
+        rates = args.mix
+        out = mixing.mix_corpus(
+            docs, args.mix_group, rates, key_col="doc_id", default_rate=args.mix_default
+        )
+    else:
+        from fscrawler_spark.functions.text_analysis import token_count
+
+        out, rates = mixing.sample_to_token_budget(
+            docs.withColumn("_tok", token_count(F.col("extracted"))),
+            args.mix_group, "_tok", args.mix_budget, key_col="doc_id",
+        )
+        out = out.drop("_tok")
+    written = _write(spark, out, args.output, [*_doc_order(out), "epoch"])
+    groups = {
+        ("<null>" if r["g"] is None else str(r["g"])): r["n"]
+        for r in written.groupBy(F.col(args.mix_group).alias("g"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    print(json.dumps({
+        "mix_group": args.mix_group,
+        "rates": rates,
+        "rows": sum(groups.values()),
+        "rows_by_group": groups,
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_chunk(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.curation import chunk_documents
+
+    chunks = chunk_documents(
+        docs, id_col="doc_id", text_col="extracted",
+        max_tokens=args.chunk, stride=args.chunk_stride,
+    ).withColumnsRenamed({"id": "doc_id", "chunk_text": "extracted"})
+    # one output row per chunk, original metadata re-attached
+    out = docs.drop("extracted").join(chunks, "doc_id")
+    stats = _write(spark, out, args.output, [*_doc_order(out), "chunk_idx"]).agg(
+        F.count(F.lit(1)).alias("chunks"),
+        F.count_distinct("doc_id").alias("docs"),
+        F.max("n_tokens").alias("widest"),
+    ).collect()[0]
+    print(json.dumps({
+        "chunk": args.chunk,
+        "stride": args.chunk_stride or args.chunk,
+        "docs": stats["docs"],
+        "chunks": stats["chunks"],
+        "max_chunk_tokens": stats["widest"],
+        "output": args.output,
+    }))
+    return 0
+
+
+def _assembly_tool_kw(docs, args) -> dict:
+    """Refuse a docs table the assembly verbs cannot stitch; return the
+    --assemble-tools keyword for the assembly functions."""
+    missing = [c for c in ("conv_id", "turn_idx", "role") if c not in docs.columns]
+    if missing:
+        raise CliError(
+            f"assembly verbs need conv_id/turn_idx/role on the docs table; missing {missing}"
+        )
+    if args.assemble_tools and "tool" not in docs.columns:
+        raise CliError("--assemble-tools needs a tool column on the docs table")
+    return {"tool_col": "tool"} if args.assemble_tools else {}
+
+
+def _run_assemble(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.assembly import assemble_conversations
+
+    out = assemble_conversations(
+        docs, text_col="extracted", max_turns=args.assemble_max_turns,
+        spans_role=args.assemble_spans, **_assembly_tool_kw(docs, args),
+    )
+    aggs = [
+        F.count(F.lit(1)).alias("convs"),
+        F.sum("n_turns").alias("turns"),
+        F.sum("n_chars").alias("chars"),
+    ]
+    if args.assemble_spans is not None:
+        aggs.append(F.sum(F.size("train_spans")).alias("spans"))
+    stats = _write(spark, out, args.output, ["conv_id"]).agg(*aggs).collect()[0]
+    line = {
+        "assemble": True,
+        "max_turns": args.assemble_max_turns,
+        "conversations": stats["convs"],
+        "turns_kept": int(stats["turns"] or 0),
+        "chars": int(stats["chars"] or 0),
+        "output": args.output,
+    }
+    if args.assemble_spans is not None:
+        line["spans_role"] = args.assemble_spans
+        line["train_spans"] = int(stats["spans"] or 0)
+    print(json.dumps(line))
+    return 0
+
+
+def _sft_examples(docs, args):
+    """The --sft-pairs examples (also --pref-pairs' candidates), with the
+    role and context bound they were built with."""
+    from fscrawler_spark.functions.assembly import sft_examples
+
+    role = args.sft_role if args.sft_role is not None else "assistant"
+    context = args.sft_context or 8
+    ex = sft_examples(
+        docs, text_col="extracted", target_role=role, context_turns=context,
+        **_assembly_tool_kw(docs, args),
+    )
+    return ex, role, context
+
+
+def _run_sft_pairs(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    out, role, context = _sft_examples(docs, args)
+    stats = _write(spark, out, args.output).agg(
+        F.count(F.lit(1)).alias("examples"),
+        F.count_distinct("conv_id").alias("convs"),
+        F.sum(F.length("prompt") + F.length("response")).alias("chars"),
+    ).collect()[0]
+    print(json.dumps({
+        "sft_pairs": True,
+        "role": role,
+        "context_turns": context,
+        "examples": stats["examples"],
+        "conversations": stats["convs"],
+        "chars": int(stats["chars"] or 0),
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_pref_pairs(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.assembly import preference_pairs
+
+    ex, role, context = _sft_examples(docs, args)
+    margin = args.pref_margin or 0.0
+    stats = _write(spark, preference_pairs(ex, min_margin=margin), args.output, ["prompt"]).agg(
+        F.count(F.lit(1)).alias("pairs"),
+        F.sum("n_candidates").alias("cands"),
+        F.avg(F.col("chosen_score") - F.col("rejected_score")).alias("gap"),
+    ).collect()[0]
+    print(json.dumps({
+        "pref_pairs": True,
+        "role": role,
+        "context_turns": context,
+        "min_margin": margin,
+        "pairs": stats["pairs"],
+        "candidates": int(stats["cands"] or 0),
+        "mean_gap": None if stats["gap"] is None else round(float(stats["gap"]), 6),
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_dsir_select(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions import mixing
+
+    target = _read_docs_table(spark, args.dsir_target, "--dsir-target")
+    # fused train+select path: one gram pass over the corpus
+    # (mixing.dsir_select) instead of the modular two-pass
+    picked = mixing.dsir_select(
+        docs, target, k=args.dsir_select, text_col="extracted", id_col="doc_id"
+    ).withColumnsRenamed({"id": "doc_id"})
+    # re-selecting from a previous dsir output: drop its stale audit
+    # columns before re-attaching (COLUMN_ALREADY_EXISTS)
+    out = docs.drop("log_weight", "sample_key").join(picked, "doc_id")
+    stats = _write(spark, out, args.output).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("log_weight").alias("lo"),
+        F.max("log_weight").alias("hi"),
+    ).collect()[0]
+    print(json.dumps({
+        "dsir_select": args.dsir_select,
+        "selected": stats["n"],
+        "log_weight_min": stats["lo"],
+        "log_weight_max": stats["hi"],
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_quality_filter(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.quality_classifier import (
+        classify_quality,
+        train_quality_classifier,
+    )
+
+    pos = _read_docs_table(spark, args.quality_pos, "--quality-pos")
+    neg = _read_docs_table(spark, args.quality_neg, "--quality-neg")
+    model = train_quality_classifier(pos, neg, text_col="extracted")
+    scored = classify_quality(docs, model, text_col="extracted", threshold=args.quality_filter)
+    total = docs.count()
+    # re-filtering a previous quality-filter output is a natural
+    # workflow: drop its stale audit column before re-attaching
+    out = docs.drop("log_odds").join(scored.filter("keep").select("doc_id", "log_odds"), "doc_id")
+    stats = _write(spark, out, args.output).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("log_odds").alias("lo"),
+        F.max("log_odds").alias("hi"),
+    ).collect()[0]
+    print(json.dumps({
+        "quality_filter": args.quality_filter,
+        "prior_log_odds": model.prior_log_odds,
+        "total": total,
+        "kept": stats["n"],
+        "log_odds_min": stats["lo"],
+        "log_odds_max": stats["hi"],
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_decontaminate(spark, args, docs):
+    from fscrawler_spark.functions import curation
+
+    bench = _read_docs_table(spark, args.decontaminate, "--decontaminate")
+    total = docs.count()
+    cols = dict(
+        id_col="doc_id", text_col="extracted", bench_id_col="doc_id", bench_text_col="extracted"
+    )
+    max_bench = args.decon_max_benchmark or 100_000
+    if args.decon_semantic is not None:
+        extra = {"semantic_cosine": args.decon_semantic, "dim": args.decon_dim or 256}
+        out = curation.semantic_decontaminate(
+            docs, bench, **cols, threshold=args.decon_semantic,
+            dim=extra["dim"], max_benchmark=max_bench,
+        )
+    elif args.decon_fuzzy is not None:
+        extra = {"fuzzy_jaccard": args.decon_fuzzy}
+        out = curation.fuzzy_decontaminate(
+            docs, bench, **cols, threshold=args.decon_fuzzy, max_benchmark=max_bench
+        )
+    else:
+        extra = {"ngrams": args.decon_ngrams or 8, "min_hits": args.decon_min_hits or 2}
+        out = curation.decontaminate(
+            docs, bench, **cols, n=extra["ngrams"], min_hits=extra["min_hits"]
+        )
+    kept = _write(spark, out, args.output).count()
+    print(json.dumps({
+        "decontaminate": True,
+        **extra,
+        "total": total,
+        "kept": kept,
+        "dropped": total - kept,
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_ppl_filter(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.lm_quality import (
+        perplexity_buckets,
+        train_char_lm,
+        train_word_lm,
+    )
+
+    keep, cuts = args.ppl_filter, args.ppl_cuts or (1 / 3, 2 / 3)
+    seed = docs
+    if args.ppl_target is not None:
+        seed = _read_docs_table(spark, args.ppl_target, "--ppl-target")
+    train = train_word_lm if args.ppl_model == "word" else train_char_lm
+    lm = train(seed, text_col="extracted")
+    total = docs.count()
+    # re-filtering a previous ppl-filter output: drop its stale audit
+    # columns before re-attaching
+    bucketed = perplexity_buckets(
+        docs.drop("ppl", "ppl_bucket"), lm, text_col="extracted", cuts=cuts
+    )
+    by_bucket = {
+        ("<null>" if r["b"] is None else r["b"]): r["n"]
+        for r in bucketed.groupBy(F.col("ppl_bucket").alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    kept = _write(spark, bucketed.filter(F.col("ppl_bucket").isin(keep)), args.output).count()
+    print(json.dumps({
+        "ppl_filter": keep,
+        "model": args.ppl_model,
+        "cuts": list(cuts),
+        "trained_on": args.ppl_target or "input",
+        "total": total,
+        "kept": kept,
+        "by_bucket": by_bucket,
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_tokenize(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.bpe import bpe_encode, merges_table, train_bpe
+
+    if args.bpe_merges is not None:
+        try:
+            rows = spark.read.parquet(args.bpe_merges).orderBy("rank").select(
+                "left", "right"
+            ).collect()
+        except Exception as e:
+            raise CliError(
+                f"--bpe-merges: cannot read merges table at {args.bpe_merges}: {e}"
+            ) from None
+        merges = [(r["left"], r["right"]) for r in rows][: args.tokenize]
+    else:
+        merges = train_bpe(docs, text_col="extracted", num_merges=args.tokenize)
+    # re-tokenizing a previous output: drop its stale audit columns
+    out = bpe_encode(
+        docs.drop("bpe_tokens", "n_bpe_tokens"), merges, text_col="extracted"
+    ).withColumn(
+        "n_bpe_tokens",
+        F.when(F.col("bpe_tokens").isNull(), F.lit(None).cast("int")).otherwise(
+            F.size("bpe_tokens")
+        ),
+    )
+    written = _write(spark, out, os.path.join(args.output, "docs"))
+    merges_table(spark, merges).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(args.output, "merges")
+    )
+    stats = written.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("n_bpe_tokens").alias("toks")
+    ).collect()[0]
+    print(json.dumps({
+        "tokenize": args.tokenize,
+        "merges": len(merges),
+        "trained": args.bpe_merges is None,
+        "rows": stats["n"],
+        "total_tokens": stats["toks"],
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_embed(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.embeddings import text_embeddings
+
+    ngrams = args.embed_ngrams or 1
+    emb = text_embeddings(
+        docs, id_col="doc_id", text_col="extracted", dim=args.embed, ngrams=ngrams
+    )
+    # the vector stack's centroid path (--semantic-dedup / IVF) requires
+    # INTEGER ids; extraction doc_ids are strings, so emit a
+    # deterministic int64 surrogate and keep doc_id alongside for
+    # mapping results back (collision budget n^2/2^65 — the same one
+    # hashed_shingles accepts)
+    if dict(docs.dtypes).get("doc_id") not in ("tinyint", "smallint", "int", "bigint"):
+        emb = emb.select(
+            F.xxhash64("vec_id").alias("vec_id"), F.col("vec_id").alias("doc_id"), "embedding"
+        )
+    stats = _write(spark, emb, args.output, ["vec_id"]).agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.count_distinct("vec_id").alias("ids"),
+        F.sum(
+            (F.aggregate("embedding", F.lit(0.0), lambda a, x: a + F.abs(x)) > 0).cast("long")
+        ).alias("nonzero"),
+    ).collect()[0]
+    print(json.dumps({
+        "embed": args.embed,
+        "ngrams": ngrams,
+        "docs": stats["docs"],
+        # ids < docs would mean surrogate collisions — surfaced, not
+        # silently absorbed
+        "distinct_vec_ids": stats["ids"],
+        # zero vectors = NULL/blank extractions; they can never
+        # semantic-match anything downstream
+        "nonzero_vectors": int(stats["nonzero"] or 0),
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_redact_pii(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions.curation import PII_PATTERNS, pii_counts, redact_pii
+
+    all_kinds = [k for k, _p, _t in PII_PATTERNS]
+    kinds = args.pii_kinds
+    # audit BEFORE redacting: pii_found counts every kind on the original
+    # text even when only a subset is redacted
+    out = docs.withColumn("pii_found", pii_counts(F.col("extracted"))).withColumn(
+        "extracted", redact_pii(F.col("extracted"), kinds)
+    )
+    stats = _write(spark, out, args.output).agg(
+        F.count(F.lit(1)).alias("docs"),
+        *[F.sum(F.element_at("pii_found", k)).alias(k) for k in all_kinds],
+    ).collect()[0]
+    print(json.dumps({
+        "redact_pii": True,
+        "kinds_redacted": sorted(kinds or all_kinds),
+        "docs": stats["docs"],
+        "found": {k: int(stats[k] or 0) for k in all_kinds},
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_semantic_dedup(spark, args, _docs):
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions import embeddings as emb_ops
+
+    try:
+        vecs = spark.read.parquet(args.input)
+    except Exception as e:
+        raise CliError(f"cannot read embeddings table at {args.input}: {e}") from None
+    if "vec_id" not in vecs.columns or "embedding" not in vecs.columns:
+        raise CliError(
+            f"{args.input} is not an embeddings table "
+            f"(needs vec_id + embedding; has {vecs.columns})"
+        )
+    n_corpus = vecs.count()
+    if n_corpus == 0:
+        # sampled_centroids would hand numpy a zero-row matrix
+        raise CliError(f"embeddings table at {args.input} is empty")
+    n_cells = args.semantic_cells or max(16, min(65536, n_corpus // 512))
+    out = emb_ops.semantic_dedup(vecs, n_cells=n_cells, threshold=args.semantic_dedup)
+    stats = _write(spark, out, args.output, ["cluster_id", "id"]).agg(
+        F.count(F.lit(1)).alias("n"), F.count_distinct("cluster_id").alias("clusters")
+    ).collect()[0]
+    print(json.dumps({
+        "semantic_dedup": args.semantic_dedup,
+        "n_cells": n_cells,
+        "clustered_vectors": stats["n"],
+        "clusters": stats["clusters"],
+        "output": args.output,
+    }))
+    return 0
+
+
+def _run_dry_run(spark, args, _docs):
+    if args.incremental:
+        # preview the TICK's plan, not a full-corpus extraction: the real
+        # delta (checksum anti-join + deletions) is what "would write"
+        from fscrawler_spark.plans.pipeline import run_incremental_update
+
+        res = run_incremental_update(
+            spark, args.input, args.output, args.settings, dry_run=True, layout=args.layout
+        )
+        print(json.dumps(res))
+        return 0
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.operators.extract import extract_transcripts
+    from fscrawler_spark.sources.transcripts import read_transcripts
+
+    docs = extract_transcripts(read_transcripts(spark, args.input), args.settings)
+    docs.explain("formatted")
+    counts = docs.groupBy("mime").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
+    )
+    by_mime = {r["mime"]: [r["n"], r["errors"]] for r in counts.collect()}
+    print(json.dumps({"dry_run": True, "by_mime": by_mime}))
+    return 0
+
+
+def _store_ticks(spark, args) -> dict:
+    """Tick every requested persisted store over the docs at --output."""
+    ticks = {}
+    if args.near_dup:
+        from fscrawler_spark.plans.dedup_store import dedup_tick
+
+        ticks["near_dup"] = dedup_tick(spark, args.output, threshold=args.near_dup_threshold)
+    if args.assemble_store:
+        from fscrawler_spark.plans.assembly_store import assembly_tick
+
+        ticks["assembled"] = assembly_tick(
+            spark, args.output, max_turns=args.assemble_max_turns,
+            tool_col="tool" if args.assemble_tools else None,
+        )
+    return ticks
+
+
+def _run_store_ticks(spark, args, _docs):
+    # standalone: one tick of EVERY requested store, on --output alone
+    print(json.dumps(_store_ticks(spark, args)))
+    return 0
+
+
+def _run_crawl(spark, args, _docs):
+    """A crawl or an --incremental tick, --loop times; the store ticks
+    composed with it run after each loop."""
+    from fscrawler_spark.plans import pipeline
+
+    if args.restart:
+        pipeline.restart_clean(args.output, spark=spark)
+    sleep_s = args.update_rate
+    for i in range(args.loop):
+        if args.incremental:
+            res = pipeline.run_incremental_update(
+                spark, args.input, args.output, args.settings,
+                layout=args.layout, publish_table=args.publish_table,
+            )
+        else:
+            res = pipeline.run_extraction_job(
+                spark, args.input, args.output, args.settings,
+                publish_table=args.publish_table,
+            )
+        res.update(_store_ticks(spark, args))
+        print(json.dumps({"loop": i + 1, **{k: v for k, v in res.items() if k != "output"}}))
+        if sleep_s is not None:
+            # persist when the next run is due (nextCheck analog); a
+            # delete-heavy tick schedules HALF the update rate so
+            # follow-up deletions are noticed sooner — and any external
+            # actor can pull next_check forward to wake the loop early
+            delay = sleep_s / 2 if (args.incremental and res.get("deleted")) else sleep_s
+            pipeline.schedule_next_check(args.output, delay)
+        if sleep_s and i + 1 < args.loop:
+            reason = pipeline.sleep_until_next_run(args.output, sleep_s)
+            if reason != "timeout":
+                print(json.dumps({"woke_early": reason}))
+    return 0
+
+
+# --- the verb table -----------------------------------------------------------
+
+
+@dataclass(frozen=True, eq=False)
+class Verb:
+    """One CLI verb. Flags are named as typed; an entry "--a/--b" in
+    ``owns`` declares flags that share one "require" message."""
+
+    flag: str  # the selector ("crawl" for the implied crawl, module doc)
+    run: Callable  # run(spark, args, docs) -> exit code
+    owns: tuple[str, ...] = ()  # flags this verb declares; each flag has one owner
+    # flags another verb owns that this one reads too; a borrowed selector
+    # makes that verb a modifier of this one
+    borrows: tuple[str, ...] = ()
+    needs: tuple[str, ...] = ()  # flags the selector cannot run without
+    # owned flag -> the flags it requires (default: the verbs that read it)
+    requires: dict = field(default_factory=dict)
+    # owned flag -> the owned flags it makes inapplicable
+    excludes: dict = field(default_factory=dict)
+    # flag -> check(flag, value, args); runs when the flag is set and owned
+    # here, or is a shared flag and this verb is selected; a parsed value it
+    # returns replaces the raw one on args
+    checks: dict = field(default_factory=dict)
+    companions: tuple[str, ...] = ()  # verbs it may run with (symmetric)
+    input: str | None = None  # "path", "docs" (read as a docs table), None (no --input)
+    session: bool = True
+    kind: str = ""  # how a "cannot combine" message describes it
+
+    def owned(self) -> list[str]:
+        return _flags(self.owns)
+
+    def reads(self) -> list[str]:
+        return _flags(self.owns + self.borrows)
+
+
+def _flags(entries) -> list[str]:
+    return [f for e in entries for f in e.split("/")]
+
+
+_CURATION = "is a one-shot curation pass"
+
+CRAWL = Verb(
+    "crawl", _run_crawl, input="path",
+    owns=("--restart", "--publish-table", "--loop", "--update-rate"),
+    checks={"--loop": _min(1), "--update-rate": _update_rate},
+    companions=("--near-dup", "--assemble-store"),
+)
+
+VERBS = (
+    # control plane (CrawlerApi analog) and snapshot-table metadata verbs
+    Verb("--status", _run_status, session=False),
+    Verb("--pause", _run_pause, session=False),
+    Verb("--resume-paused", _run_pause, session=False),
+    Verb(
+        "--table-history", _run_table_history, session=False,
+        owns=("--table-expire",), checks={"--table-expire": _min(1)},
+    ),
+    Verb(
+        "--table-vacuum", _run_table_vacuum, session=False,
+        checks={"--table-vacuum": _min(0)},
+    ),
+    Verb("--table-tag", _run_table_tag, session=False, owns=("--tag-force",)),
+    Verb("--table-drop-tag", _run_table_drop_tag, session=False),
+    Verb("--table-rollback", _run_table_rollback, session=False),
+    # snapshot-table data verbs and derived-view syncs
+    Verb("--table-compact", _run_table_compact, checks={"--table-compact": _min(1)}),
+    Verb(
+        "--table-changes", _run_table_changes, owns=("--changes-out",),
+        checks={"--table-changes": _changes_range},
+    ),
+    Verb("--table-upsert", _run_table_upsert, checks={"--table-keys": _named_keys}),
+    Verb("--table-delete", _run_table_delete, checks={"--table-keys": _named_keys}),
+    Verb(
+        "--sync-derived", _run_sync_derived,
+        owns=("--view-filter/--view-select", "--force-bootstrap"),
+        borrows=("--loop", "--update-rate"),
+        checks={"--table-keys": _sync_keys},
+    ),
+    Verb(
+        "--sync-dag", _run_sync_dag,
+        borrows=("--force-bootstrap", "--loop", "--update-rate"),
+        checks={"--table-keys": _sync_keys, "--sync-dag": lambda f, v, a: _dag_spec(a)},
+    ),
+    Verb("--doctor", _run_doctor, kind="is a standalone read-only check"),
+    Verb("--compact", _run_compact, input="path", kind="is a one-shot migration"),
+    # one-shot curation passes over the docs table at --input
+    Verb(
+        "--dedup-lines", _run_dedup_lines, input="docs", kind=_CURATION,
+        checks={"--dedup-lines": _min(2)},
+    ),
+    Verb("--clean-text", _run_clean_text, input="docs", kind=_CURATION),
+    Verb(
+        "--c4-filter", _run_c4_filter, input="docs", kind=_CURATION,
+        owns=("--c4-min-sentences",), checks={"--c4-min-sentences": _min(0)},
+    ),
+    Verb("--gopher-filter", _run_gopher_filter, input="docs", kind=_CURATION),
+    Verb("--report", _run_report, input="docs", kind=_CURATION, owns=("--report-group",)),
+    Verb(
+        "--export", _run_export, input="docs", kind=_CURATION,
+        owns=("--export-seed", "--export-format", "--export-curriculum"),
+        checks={"--export": _min(1)},
+    ),
+    Verb(
+        "--dedup-spans", _run_dedup_spans, input="docs", kind=_CURATION,
+        checks={"--dedup-spans": _min(2)},
+    ),
+    Verb(
+        "--mix", _run_mix, input="docs", kind=_CURATION,
+        owns=("--mix-group", "--mix-default"),
+        checks={"--mix": lambda f, v, a: _mix_rates(v)},
+    ),
+    Verb("--mix-budget", _run_mix, input="docs", kind=_CURATION, borrows=("--mix-group",)),
+    Verb(
+        "--chunk", _run_chunk, input="docs", kind=_CURATION,
+        owns=("--chunk-stride",), checks={"--chunk": _min(1), "--chunk-stride": _stride},
+    ),
+    Verb(
+        "--assemble", _run_assemble, input="docs", kind=_CURATION,
+        owns=("--assemble-max-turns", "--assemble-spans", "--assemble-tools"),
+        checks={"--assemble-max-turns": _min(1)},
+    ),
+    Verb(
+        "--sft-pairs", _run_sft_pairs, input="docs", kind=_CURATION,
+        owns=("--sft-context/--sft-role",), borrows=("--assemble-tools",),
+        checks={"--sft-context": _min(1)},
+    ),
+    Verb(
+        "--pref-pairs", _run_pref_pairs, input="docs", kind=_CURATION,
+        owns=("--pref-margin",), borrows=("--sft-context/--sft-role", "--assemble-tools"),
+        checks={"--pref-margin": _min(0)},
+    ),
+    Verb(
+        "--dsir-select", _run_dsir_select, input="docs", kind=_CURATION,
+        owns=("--dsir-target",), needs=("--dsir-target",),
+        checks={"--dsir-select": _min(1)},
+    ),
+    Verb(
+        "--quality-filter", _run_quality_filter, input="docs", kind=_CURATION,
+        owns=("--quality-pos/--quality-neg",), needs=("--quality-pos", "--quality-neg"),
+    ),
+    Verb(
+        "--decontaminate", _run_decontaminate, input="docs", kind=_CURATION,
+        owns=(
+            "--decon-ngrams/--decon-min-hits", "--decon-fuzzy", "--decon-semantic",
+            "--decon-dim", "--decon-max-benchmark",
+        ),
+        requires={
+            "--decon-dim": ("--decon-semantic",),
+            "--decon-max-benchmark": ("--decon-fuzzy", "--decon-semantic"),
+        },
+        excludes={
+            "--decon-fuzzy": ("--decon-ngrams", "--decon-min-hits"),
+            "--decon-semantic": ("--decon-fuzzy", "--decon-ngrams", "--decon-min-hits"),
+        },
+        checks={
+            "--decon-ngrams": _min(1),
+            "--decon-min-hits": _min(1),
+            "--decon-fuzzy": _similarity,
+            "--decon-semantic": _similarity,
+            "--decon-dim": _within(1, 4096),
+            "--decon-max-benchmark": _min(1),
+        },
+    ),
+    Verb(
+        "--ppl-filter", _run_ppl_filter, input="docs", kind=_CURATION,
+        owns=("--ppl-model", "--ppl-target/--ppl-cuts"),
+        checks={
+            "--ppl-filter": lambda f, v, a: _ppl_keep(v),
+            "--ppl-cuts": lambda f, v, a: _ppl_cuts(v),
+        },
+    ),
+    Verb(
+        "--tokenize", _run_tokenize, input="docs", kind=_CURATION,
+        owns=("--bpe-merges",), checks={"--tokenize": _min(1)},
+    ),
+    Verb(
+        "--embed", _run_embed, input="docs", kind=_CURATION, owns=("--embed-ngrams",),
+        checks={"--embed": _within(1, 4096, "--embed DIM"), "--embed-ngrams": _min(1)},
+    ),
+    Verb(
+        "--redact-pii", _run_redact_pii, input="docs", kind=_CURATION,
+        owns=("--pii-kinds",), checks={"--pii-kinds": lambda f, v, a: _pii_kinds(v)},
+    ),
+    # reads an EMBEDDINGS table, not the docs table
+    Verb(
+        "--semantic-dedup", _run_semantic_dedup, input="path", kind="is a one-shot pass",
+        owns=("--semantic-cells",),
+        checks={"--semantic-dedup": _similarity, "--semantic-cells": _min(1)},
+    ),
+    # the crawl family; the first selected verb of a companion set runs it
+    # --dry-run reads --incremental as a modifier: it previews the tick
+    Verb("--dry-run", _run_dry_run, input="path", borrows=("--incremental", "--layout")),
+    Verb(
+        "--incremental", _run_crawl, input="path", owns=("--layout",),
+        requires={"--layout": ("--incremental",)},
+        borrows=("--publish-table", "--loop", "--update-rate"),
+        companions=("--near-dup", "--assemble-store"),
+    ),
+    CRAWL,
+    Verb(
+        "--near-dup", _run_store_ticks, owns=("--near-dup-threshold",),
+        companions=("--assemble-store",),
+    ),
+    Verb(
+        "--assemble-store", _run_store_ticks,
+        borrows=("--assemble-max-turns", "--assemble-tools"),
+    ),
+)
+
+# flags no verb owns: --input (each verb's `input` says whether it reads
+# it), where the verb writes, how Spark runs, the table keys, and the
+# extraction settings (validated for every verb)
+SHARED = (
+    "--input", "--output", "--master", "--rest-port", "--table-keys",
+    "--indexed-chars", "--ignore-above", "--includes", "--excludes", "--filters",
+    "--num-buckets", "--skew-salt", "--lang-detect", "--store-source",
+)
+
+
+def _either(names) -> str:
+    names = list(names)
+    if len(names) < 3:
+        return " or ".join(names)
+    return ", ".join(names[:-1]) + ", or " + names[-1]
+
+
+def validate(args, parser: argparse.ArgumentParser) -> Verb:
+    """The one validation pass: select the verbs the flags ask for,
+    refuse every combination and value the table does not allow, and
+    return the verb whose runner main() runs. Raises CliError."""
+    actions = {a.option_strings[-1]: a for a in parser._actions if a.option_strings}
+
+    def is_set(flag):
+        return getattr(args, actions[flag].dest) != actions[flag].default
+
+    def value(flag):
+        return getattr(args, actions[flag].dest)
+
+    chosen = [v for v in VERBS if v is not CRAWL and is_set(v.flag)]
+    # a verb whose selector another chosen verb borrows is only that
+    # verb's modifier: it does not run, so its own flags are not read
+    modifiers = {f for v in chosen for f in v.borrows}
+    chosen = [v for v in chosen if v.flag not in modifiers]
+    read = {f for v in chosen for f in v.reads()}
+    crawl_by = [f for f in CRAWL.owned() if is_set(f) and f not in read]
+    if args.input is not None and not any(v.input for v in chosen):
+        crawl_by.insert(0, "--input")
+    selected = [v for v in VERBS if v in chosen or (v is CRAWL and (crawl_by or not chosen))]
+
+    def name(v):
+        return v.flag if v is not CRAWL else "/".join(crawl_by) or "a crawl"
+
+    for i, a in enumerate(selected):
+        for b in selected[i + 1:]:
+            if b.flag not in a.companions and a.flag not in b.companions:
+                kind = f" {a.kind} and" if a.kind else ""
+                raise CliError(
+                    f"{name(a)}{kind} cannot combine with {name(b)} — one verb per invocation"
+                )
+    for v in VERBS:
+        for entry in v.owns:
+            flags = entry.split("/")
+            if not any(is_set(f) for f in flags):
+                continue
+            if entry in v.requires:
+                alts = v.requires[entry]
+                if any(is_set(f) for f in alts):
+                    continue
+            else:
+                readers = [w for w in VERBS if set(flags) & set(w.reads())]
+                if any(w in selected for w in readers):
+                    continue
+                alts = [w.flag for w in readers]
+            word = "require" if len(flags) > 1 else "requires"
+            raise CliError(f"{entry} {word} {_either(alts)}")
+    for v in selected:
+        if not all(is_set(f) for f in v.needs):
+            raise CliError(f"{v.flag} requires {' AND '.join(v.needs)}")
+        for f, others in v.excludes.items():
+            if is_set(f) and any(is_set(o) for o in others):
+                raise CliError(f"{'/'.join(others)} do not apply with {f}")
+    no_input = [name(v) for v in selected if v.input and args.input is None]
+    if no_input:
+        raise CliError(
+            f"{'/'.join(no_input)} cannot run without --input "
+            "(crawls, ticks and one-shot passes need --input)"
+        )
+    for v in VERBS:
+        for f, check in v.checks.items():
+            if is_set(f) and (v in selected or f in v.owned()):
+                parsed = check(f, value(f), args)
+                if parsed is not None:
+                    setattr(args, actions[f].dest, parsed)
+    args.settings = _settings(args)
+    return selected[0]
+
+
 def main(argv: list[str] | None = None, spark=None) -> int:
     """CLI entry. ``spark``: optional externally-owned session (tests /
     embedding callers) — the CLI then neither creates nor stops it."""
-    args = build_parser().parse_args(argv)
-    from fscrawler_spark.config import ExtractSettings
-    from fscrawler_spark.plans.pipeline import (
-        clear_pause,
-        job_status,
-        request_pause,
-        run_extraction_job,
-    )
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    try:
+        verb = validate(args, parser)
+    except CliError as e:
+        print(f"error: {e}", file=sys.stderr)
+        return 2
+
+    from pyspark.errors import AnalysisException
+
     from fscrawler_spark.session import get_spark
 
-    # control-plane verbs: no SparkSession needed (CrawlerApi analog)
-    if args.status:
-        print(json.dumps(job_status(args.output)))
-        return 0
-    if args.pause:
-        request_pause(args.output)
-        print(json.dumps({"pause_requested": True}))
-        return 0
-    if args.resume_paused:
-        clear_pause(args.output)
-        print(json.dumps({"pause_requested": False}))
-        return 0
-    if args.sync_derived is not None or args.sync_dag is not None:
-        # same contract as --doctor and the curation verbs: a combination
-        # that would silently skip one of the verbs is an error, not a
-        # half-done exit 0 — and it must be checked BEFORE any verb
-        # dispatches (--loop/--update-rate ARE the sync's own knobs;
-        # curation-verb conflicts are caught by their exclusivity check)
-        sync_conflicts = [
-            name
-            for name, on in (
-                ("--sync-derived with --sync-dag",
-                 args.sync_derived is not None and args.sync_dag is not None),
-                ("--input", args.input is not None),
-                ("--incremental", args.incremental),
-                ("--restart", args.restart),
-                ("--dry-run", args.dry_run),
-                ("--compact", args.compact),
-                ("--doctor", args.doctor),
-                ("--near-dup", args.near_dup),
-                ("--assemble-store", args.assemble_store),
-                ("--semantic-dedup", args.semantic_dedup is not None),
-                ("--table-history", args.table_history),
-                ("--table-expire", args.table_expire is not None),
-                ("--table-rollback", args.table_rollback is not None),
-                ("--table-vacuum", args.table_vacuum is not None),
-                ("--table-upsert", args.table_upsert is not None),
-                ("--table-delete", args.table_delete is not None),
-                ("--table-compact", args.table_compact is not None),
-                ("--table-changes", args.table_changes is not None),
-                ("--table-tag", args.table_tag is not None),
-                ("--table-drop-tag", args.table_drop_tag is not None),
-            )
-            if on
-        ]
-        if sync_conflicts:
-            print(
-                f"error: --sync-derived/--sync-dag cannot combine with "
-                f"{'/'.join(sync_conflicts)} — one verb per invocation",
-                file=sys.stderr,
-            )
-            return 2
-        if args.table_keys.strip().lower() == "none":
-            print(
-                "error: --table-keys none is the raw file-level stream "
-                "sentinel for --table-changes; a derived-table sync is "
-                "keyed — name real key columns (default conv_id,turn_idx)",
-                file=sys.stderr,
-            )
-            return 2
-    if args.table_expire is not None and not args.table_history:
-        print("error: --table-expire requires --table-history", file=sys.stderr)
-        return 2
-    if args.table_vacuum is not None:
-        from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-        t = SnapshotTable(args.output)
-        if not t.exists():
-            print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-            return 2
-        if args.table_vacuum < 0:
-            print("error: --table-vacuum AGE_S must be >= 0", file=sys.stderr)
-            return 2
-        removed = t.remove_orphans(older_than_s=args.table_vacuum)
-        print(json.dumps({"root": args.output, "removed_orphans": removed}))
-        return 0
-    if args.tag_force and args.table_tag is None:
-        print("error: --tag-force requires --table-tag", file=sys.stderr)
-        return 2
-    if args.table_tag is not None or args.table_drop_tag is not None:
-        # one verb per invocation (the repo-wide contract): a combination
-        # would silently run only the tag verb and skip the rest
-        tag_conflicts = [
-            name
-            for name, on in (
-                ("--table-drop-tag with --table-tag",
-                 args.table_tag is not None and args.table_drop_tag is not None),
-                ("--input", args.input is not None),
-                ("--incremental", args.incremental),
-                ("--restart", args.restart),
-                ("--dry-run", args.dry_run),
-                ("--compact", args.compact),
-                ("--doctor", args.doctor),
-                ("--table-history", args.table_history),
-                ("--table-expire", args.table_expire is not None),
-                ("--table-rollback", args.table_rollback is not None),
-                ("--table-vacuum", args.table_vacuum is not None),
-                ("--table-upsert", args.table_upsert is not None),
-                ("--table-delete", args.table_delete is not None),
-                ("--table-compact", args.table_compact is not None),
-                ("--table-changes", args.table_changes is not None),
-            )
-            if on
-        ]
-        if tag_conflicts:
-            print(
-                f"error: --table-tag/--table-drop-tag cannot combine with "
-                f"{'/'.join(tag_conflicts)} — one verb per invocation",
-                file=sys.stderr,
-            )
-            return 2
-        from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-        t = SnapshotTable(args.output)
-        if not t.exists():
-            print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-            return 2
-        try:
-            if args.table_drop_tag is not None:
-                sid = t.drop_tag(args.table_drop_tag)
-                print(json.dumps({
-                    "root": args.output,
-                    "dropped_tag": args.table_drop_tag,
-                    "was_snapshot": sid,
-                }))
-                return 0
-            name, sep, suffix = args.table_tag.rpartition("@")
-            if sep and suffix.isdigit():
-                sid = t.tag(name, int(suffix), force=args.tag_force)
-            else:
-                sid = t.tag(args.table_tag, force=args.tag_force)
-        except (ValueError, FileNotFoundError) as e:
-            print(f"error: {e}", file=sys.stderr)
-            return 2
-        print(json.dumps({
-            "root": args.output,
-            "tag": name if sep and suffix.isdigit() else args.table_tag,
-            "snapshot_id": sid,
-        }))
-        return 0
-    if args.table_rollback is not None:
-        from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-        t = SnapshotTable(args.output)
-        if not t.exists():
-            print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-            return 2
-        try:
-            # metadata-only commit: rollback never touches data files or
-            # Spark — the spark handle is unused by the commit path
-            sid = t.rollback(None, args.table_rollback)
-        except FileNotFoundError as e:
-            print(f"error: {e}", file=sys.stderr)
-            return 2
-        print(json.dumps({
-            "root": args.output,
-            "rolled_back_to": args.table_rollback,
-            "new_snapshot": sid,
-        }))
-        return 0
-    if args.table_history:
-        from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-        t = SnapshotTable(args.output)
-        if not t.exists():
-            print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-            return 2
-        expired: list[str] = []
-        if args.table_expire is not None:
-            if args.table_expire < 1:
-                print("error: --table-expire must keep >= 1 snapshot", file=sys.stderr)
-                return 2
-            expired = t.expire_unreferenced(keep_snapshots=args.table_expire)
-        print(
-            json.dumps(
-                {
-                    "root": args.output,
-                    "current": t.current_id(),
-                    "tags": t.tags(),
-                    "history": t.history(),
-                    "expired_files": expired,
-                }
-            )
-        )
-        return 0
-    if (args.near_dup or args.assemble_store) and (
-        args.doctor or args.compact or args.dry_run
-    ):
-        # the store ticks mutate; a read-only or one-shot migration verb
-        # silently skipping them would mislead
-        print(
-            "error: --near-dup/--assemble-store cannot combine with "
-            "--doctor/--compact/--dry-run",
-            file=sys.stderr,
-        )
-        return 2
-    if (
-        not args.input
-        and not args.doctor
-        and not args.near_dup
-        and not args.assemble_store
-        and args.table_upsert is None
-        and args.table_delete is None
-        and args.table_compact is None
-        and args.table_changes is None
-        and args.sync_derived is None
-        and args.sync_dag is None
-    ):
-        # --doctor/--table-upsert/--table-delete/--table-compact/
-        # --table-changes/--sync-derived need only --output (like the
-        # control verbs, but they read parquet so they do need a session)
-        print("error: --input is required to run a crawl", file=sys.stderr)
-        return 2
-    if args.restart and args.incremental:
-        # usage contradiction: validated BEFORE spinning up a JVM, and
-        # before --dry-run could mask it
-        print(
-            "error: --restart (full re-index) contradicts --incremental "
-            "(tick over existing output); pick one",
-            file=sys.stderr,
-        )
-        return 2
-    if args.doctor and (
-        args.incremental or args.restart or args.dry_run or args.compact or args.loop != 1
-    ):
-        # the doctor is read-only and returns its own exit code; combining
-        # it with a mutating verb would silently skip the mutation
-        print(
-            "error: --doctor is a standalone read-only check and cannot "
-            "combine with --incremental/--restart/--dry-run/--compact/--loop",
-            file=sys.stderr,
-        )
-        return 2
-    curation_verbs = [
-        name
-        for name, on in (
-            ("--dedup-lines", args.dedup_lines is not None),
-            ("--clean-text", args.clean_text),
-            ("--c4-filter", args.c4_filter),
-            ("--gopher-filter", args.gopher_filter),
-            ("--report", args.report),
-            ("--export", args.export is not None),
-            ("--dedup-spans", args.dedup_spans is not None),
-            ("--mix", args.mix is not None),
-            ("--mix-budget", args.mix_budget is not None),
-            ("--chunk", args.chunk is not None),
-            ("--assemble", args.assemble),
-            ("--sft-pairs", args.sft_pairs),
-            ("--pref-pairs", args.pref_pairs),
-            ("--dsir-select", args.dsir_select is not None),
-            ("--quality-filter", args.quality_filter is not None),
-            ("--decontaminate", args.decontaminate is not None),
-            ("--ppl-filter", args.ppl_filter is not None),
-            ("--tokenize", args.tokenize is not None),
-            ("--embed", args.embed is not None),
-            ("--redact-pii", args.redact_pii),
-        )
-        if on
-    ]
-    # --semantic-dedup reads an EMBEDDINGS table, not the docs table, so
-    # it shares the one-shot exclusivity contract but not the docs read
-    if args.semantic_dedup is not None and (
-        curation_verbs
-        or args.incremental or args.restart or args.dry_run or args.compact
-        or args.doctor or args.near_dup or args.assemble_store or args.loop != 1
-    ):
-        print(
-            "error: --semantic-dedup is a one-shot pass and cannot combine "
-            "with another verb",
-            file=sys.stderr,
-        )
-        return 2
-    if args.semantic_dedup is not None and not (0.0 < args.semantic_dedup <= 1.0):
-        print(
-            f"error: --semantic-dedup threshold must be in (0, 1], got "
-            f"{args.semantic_dedup}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.semantic_cells is not None and args.semantic_dedup is None:
-        print("error: --semantic-cells requires --semantic-dedup", file=sys.stderr)
-        return 2
-    if args.semantic_cells is not None and args.semantic_cells < 1:
-        print(
-            f"error: --semantic-cells must be >= 1, got {args.semantic_cells}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.dsir_select is not None:
-        if args.dsir_select < 1:
-            print(
-                f"error: --dsir-select must be >= 1, got {args.dsir_select}",
-                file=sys.stderr,
-            )
-            return 2
-        if args.dsir_target is None:
-            print("error: --dsir-select requires --dsir-target", file=sys.stderr)
-            return 2
-    elif args.dsir_target is not None:
-        print("error: --dsir-target requires --dsir-select", file=sys.stderr)
-        return 2
-    if args.quality_filter is not None:
-        if args.quality_pos is None or args.quality_neg is None:
-            print(
-                "error: --quality-filter requires --quality-pos AND --quality-neg",
-                file=sys.stderr,
-            )
-            return 2
-    elif args.quality_pos is not None or args.quality_neg is not None:
-        print(
-            "error: --quality-pos/--quality-neg require --quality-filter",
-            file=sys.stderr,
-        )
-        return 2
-    if len(curation_verbs) > 1 or (
-        curation_verbs
-        and (
-            args.incremental or args.restart or args.dry_run or args.compact
-            or args.doctor or args.near_dup or args.assemble_store
-            or args.loop != 1 or args.sync_derived is not None
-            or args.sync_dag is not None
-        )
-    ):
-        print(
-            f"error: {'/'.join(curation_verbs)} is a one-shot curation pass "
-            "and cannot combine with another curation verb or "
-            "--incremental/--restart/--dry-run/--compact/--doctor/"
-            "--near-dup/--assemble-store/--sync-derived/--sync-dag/--loop",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decontaminate is None and (
-        args.decon_ngrams is not None or args.decon_min_hits is not None
-    ):
-        print(
-            "error: --decon-ngrams/--decon-min-hits require --decontaminate",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_ngrams is not None and args.decon_ngrams < 1:
-        print(
-            f"error: --decon-ngrams must be >= 1, got {args.decon_ngrams}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_min_hits is not None and args.decon_min_hits < 1:
-        print(
-            f"error: --decon-min-hits must be >= 1, got {args.decon_min_hits}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_max_benchmark is not None and (
-        args.decon_fuzzy is None and args.decon_semantic is None
-    ):
-        print(
-            "error: --decon-max-benchmark requires --decon-fuzzy or "
-            "--decon-semantic",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_max_benchmark is not None and args.decon_max_benchmark < 1:
-        print(
-            f"error: --decon-max-benchmark must be >= 1, got {args.decon_max_benchmark}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.force_bootstrap and args.sync_derived is None and args.sync_dag is None:
-        print(
-            "error: --force-bootstrap requires --sync-derived or --sync-dag",
-            file=sys.stderr,
-        )
-        return 2
-    if args.sync_derived is None and (
-        args.view_filter is not None or args.view_select is not None
-    ):
-        print(
-            "error: --view-filter/--view-select require --sync-derived",
-            file=sys.stderr,
-        )
-        return 2
-    if args.ppl_filter is None and (
-        args.ppl_target is not None or args.ppl_cuts is not None
-    ):
-        print("error: --ppl-target/--ppl-cuts require --ppl-filter", file=sys.stderr)
-        return 2
-    ppl_keep: list[str] = []
-    if args.ppl_filter is not None:
-        ppl_keep = [b.strip() for b in args.ppl_filter.split(",") if b.strip()]
-        bad = [b for b in ppl_keep if b not in ("head", "middle", "tail")]
-        if bad or not ppl_keep:
-            print(
-                f"error: --ppl-filter takes a comma list of head/middle/tail, "
-                f"got {args.ppl_filter!r}",
-                file=sys.stderr,
-            )
-            return 2
-    ppl_cuts = (1 / 3, 2 / 3)
-    if args.ppl_cuts is not None:
-        try:
-            lo, hi = (float(x) for x in args.ppl_cuts.split(","))
-        except ValueError:
-            print(
-                f"error: --ppl-cuts must be 'LO,HI' floats, got {args.ppl_cuts!r}",
-                file=sys.stderr,
-            )
-            return 2
-        if not (0.0 < lo < hi < 1.0):
-            print(
-                f"error: --ppl-cuts must satisfy 0 < LO < HI < 1, got {lo},{hi}",
-                file=sys.stderr,
-            )
-            return 2
-        ppl_cuts = (lo, hi)
-    if args.tokenize is not None and args.tokenize < 1:
-        print(f"error: --tokenize must be >= 1, got {args.tokenize}", file=sys.stderr)
-        return 2
-    if args.bpe_merges is not None and args.tokenize is None:
-        print("error: --bpe-merges requires --tokenize", file=sys.stderr)
-        return 2
-    if args.report_group is not None and not args.report:
-        print("error: --report-group requires --report", file=sys.stderr)
-        return 2
-    if args.export is not None and args.export < 1:
-        print(f"error: --export must be >= 1, got {args.export}", file=sys.stderr)
-        return 2
-    if args.export_seed != 0 and args.export is None:
-        print("error: --export-seed requires --export", file=sys.stderr)
-        return 2
-    if args.export_format != "parquet" and args.export is None:
-        print("error: --export-format requires --export", file=sys.stderr)
-        return 2
-    if args.c4_min_sentences is not None and not args.c4_filter:
-        print("error: --c4-min-sentences requires --c4-filter", file=sys.stderr)
-        return 2
-    if args.c4_min_sentences is not None and args.c4_min_sentences < 0:
-        print(
-            f"error: --c4-min-sentences must be >= 0, got {args.c4_min_sentences}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.chunk_stride is not None and args.chunk is None:
-        print("error: --chunk-stride requires --chunk", file=sys.stderr)
-        return 2
-    if args.chunk is not None and args.chunk < 1:
-        print(f"error: --chunk must be >= 1, got {args.chunk}", file=sys.stderr)
-        return 2
-    if args.chunk_stride is not None and not (1 <= args.chunk_stride <= (args.chunk or 0)):
-        print(
-            f"error: --chunk-stride must be in [1, --chunk={args.chunk}], "
-            f"got {args.chunk_stride} (a stride past the window drops tokens)",
-            file=sys.stderr,
-        )
-        return 2
-    if args.embed is not None and not (1 <= args.embed <= 4096):
-        print(f"error: --embed DIM must be in [1, 4096], got {args.embed}", file=sys.stderr)
-        return 2
-    if args.embed_ngrams is not None and args.embed is None:
-        print("error: --embed-ngrams requires --embed", file=sys.stderr)
-        return 2
-    if args.embed_ngrams is not None and args.embed_ngrams < 1:
-        print(
-            f"error: --embed-ngrams must be >= 1, got {args.embed_ngrams}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_fuzzy is not None and args.decontaminate is None:
-        print("error: --decon-fuzzy requires --decontaminate", file=sys.stderr)
-        return 2
-    if args.decon_fuzzy is not None and not (0.0 < args.decon_fuzzy <= 1.0):
-        print(
-            f"error: --decon-fuzzy SIM must be in (0, 1], got {args.decon_fuzzy}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_fuzzy is not None and (
-        args.decon_ngrams is not None or args.decon_min_hits is not None
-    ):
-        print(
-            "error: --decon-fuzzy replaces the n-gram scan; "
-            "--decon-ngrams/--decon-min-hits do not apply",
-            file=sys.stderr,
-        )
-        return 2
-    if args.decon_semantic is not None:
-        if args.decontaminate is None:
-            print("error: --decon-semantic requires --decontaminate", file=sys.stderr)
-            return 2
-        if not (0.0 < args.decon_semantic <= 1.0):
-            print(
-                f"error: --decon-semantic SIM must be in (0, 1], got "
-                f"{args.decon_semantic}",
-                file=sys.stderr,
-            )
-            return 2
-        if (
-            args.decon_fuzzy is not None
-            or args.decon_ngrams is not None
-            or args.decon_min_hits is not None
-        ):
-            print(
-                "error: --decon-semantic replaces the n-gram scan; "
-                "--decon-fuzzy/--decon-ngrams/--decon-min-hits do not apply",
-                file=sys.stderr,
-            )
-            return 2
-    if args.decon_dim is not None and args.decon_semantic is None:
-        print("error: --decon-dim requires --decon-semantic", file=sys.stderr)
-        return 2
-    if args.decon_dim is not None and not (1 <= args.decon_dim <= 4096):
-        print(
-            f"error: --decon-dim must be in [1, 4096], got {args.decon_dim}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.pii_kinds is not None and not args.redact_pii:
-        print("error: --pii-kinds requires --redact-pii", file=sys.stderr)
-        return 2
-    if args.pii_kinds is not None:
-        from fscrawler_spark.functions.curation import PII_PATTERNS
-
-        known = {k for k, _p, _t in PII_PATTERNS}
-        bad = [k for k in args.pii_kinds.split(",") if k not in known]
-        if bad:
-            print(
-                f"error: unknown --pii-kinds {bad}; known: {sorted(known)}",
-                file=sys.stderr,
-            )
-            return 2
-    if args.assemble_spans is not None and not args.assemble:
-        print("error: --assemble-spans requires --assemble", file=sys.stderr)
-        return 2
-    if args.assemble_max_turns is not None and not (args.assemble or args.assemble_store):
-        print(
-            "error: --assemble-max-turns requires --assemble or --assemble-store",
-            file=sys.stderr,
-        )
-        return 2
-    if args.assemble_tools and not (
-        args.assemble or args.sft_pairs or args.pref_pairs or args.assemble_store
-    ):
-        print(
-            "error: --assemble-tools requires --assemble, --sft-pairs, "
-            "--pref-pairs, or --assemble-store",
-            file=sys.stderr,
-        )
-        return 2
-    if args.assemble_max_turns is not None and args.assemble_max_turns < 1:
-        print(
-            f"error: --assemble-max-turns must be >= 1, got {args.assemble_max_turns}",
-            file=sys.stderr,
-        )
-        return 2
-    if (args.sft_context is not None or args.sft_role is not None) and not (
-        args.sft_pairs or args.pref_pairs
-    ):
-        print(
-            "error: --sft-context/--sft-role require --sft-pairs or --pref-pairs",
-            file=sys.stderr,
-        )
-        return 2
-    if args.pref_margin is not None and not args.pref_pairs:
-        print("error: --pref-margin requires --pref-pairs", file=sys.stderr)
-        return 2
-    if args.pref_margin is not None and args.pref_margin < 0:
-        print(
-            f"error: --pref-margin must be >= 0, got {args.pref_margin}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.export_curriculum is not None and args.export is None:
-        print("error: --export-curriculum requires --export", file=sys.stderr)
-        return 2
-    if args.sft_context is not None and args.sft_context < 1:
-        print(
-            f"error: --sft-context must be >= 1, got {args.sft_context}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.dedup_spans is not None and args.dedup_spans < 2:
-        print(
-            f"error: --dedup-spans must be >= 2, got {args.dedup_spans}",
-            file=sys.stderr,
-        )
-        return 2
-    if args.dedup_lines is not None and args.dedup_lines < 2:
-        print(
-            f"error: --dedup-lines must be >= 2 (a line 'repeated' in "
-            f"{args.dedup_lines} doc is every line), got {args.dedup_lines}",
-            file=sys.stderr,
-        )
-        return 2
-    mix_rates = None
-    if args.mix is not None:
-        # parse 'GROUP=RATE[,GROUP=RATE...]' before spinning up a JVM;
-        # rate-range errors (negative, inf, sub-resolution) are caught by
-        # mixing._split_rate at run time with the same exit-2 contract
-        mix_rates = {}
-        for part in args.mix.split(","):
-            name, sep, val = part.partition("=")
-            try:
-                if not sep or not name.strip():
-                    raise ValueError(part)
-                mix_rates[name.strip()] = float(val)
-            except ValueError:
-                print(
-                    f"error: --mix expects GROUP=RATE[,GROUP=RATE...], "
-                    f"got {part!r}",
-                    file=sys.stderr,
-                )
-                return 2
-    if args.compact and (args.incremental or args.restart or args.dry_run or args.loop != 1):
-        # compaction is a single one-way migration: silently ignoring any
-        # of these flags would run PARTIAL behavior under a contract the
-        # user didn't get (--dry-run especially: compaction writes)
-        print(
-            "error: --compact is a one-shot migration and cannot combine "
-            "with --incremental/--restart/--dry-run/--loop",
-            file=sys.stderr,
-        )
-        return 2
-
-    from fscrawler_spark.config import (
-        DEFAULT_INDEXED_CHARS,
-        parse_byte_size,
-        parse_percentage,
-        parse_time_value,
-    )
-
-    # value-type parsing AND settings-range errors are config errors:
-    # clean message + exit 2 (argparse type= semantics), never a
-    # traceback — ExtractSettings.__post_init__ validates every numeric
-    # knob (negative --indexed-chars, --num-buckets 0, ...)
-    try:
-        ic = str(args.indexed_chars).strip()
-        ic_percent = parse_percentage(ic) if ic.endswith("%") else None
-        ic_chars = int(ic) if ic_percent is None else DEFAULT_INDEXED_CHARS
-        ignore_above = parse_byte_size(args.ignore_above)
-        sleep_s = parse_time_value(args.update_rate)
-        if sleep_s is not None and sleep_s < 0:
-            raise ValueError(f"--update-rate must be >= 0, got {args.update_rate!r}")
-        if args.loop < 1:
-            raise ValueError(f"--loop must be >= 1, got {args.loop}")
-        settings = ExtractSettings(
-            indexed_chars=ic_chars,
-            indexed_chars_percent=ic_percent,
-            ignore_above=ignore_above,
-            includes=tuple(args.includes),
-            excludes=tuple(args.excludes),
-            filters=tuple(args.filters),
-            num_buckets=args.num_buckets,
-            skew_salt=args.skew_salt,
-            lang_detect=args.lang_detect,
-            store_source=args.store_source,
-        )
-    except ValueError as e:
-        print(f"error: invalid argument value: {e}", file=sys.stderr)
-        return 2
     rest_server = None
-    owns_session = spark is None
+    owns_session = spark is None and verb.session
     # everything from the server start onward sits inside the try: a
     # get_spark failure (bad --master, port conflict) must not leak the
     # bound HTTP thread into the host process
@@ -1593,1200 +2321,19 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             print(json.dumps({"rest": f"http://{rest_server.host}:{rest_server.port}"}))
         if owns_session:
             spark = get_spark(app="fscrawler-spark-cli", master=args.master)
-        if args.doctor:
-            from fscrawler_spark.plans.doctor import check_output
-
-            res = check_output(spark, args.output)
-            print(json.dumps(res))
-            return 0 if res["ok"] else 3
-        if args.table_compact is not None:
-            from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-            t = SnapshotTable(args.output)
-            if not t.exists():
-                print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-                return 2
-            if args.table_compact < 1:
-                print("error: --table-compact target must be >= 1 MB", file=sys.stderr)
-                return 2
-            res = t.compact(spark, target_file_bytes=args.table_compact * 1024 * 1024)
-            res["operation"] = "compact"
-            print(json.dumps(res))
-            return 0
-        if args.table_changes is not None:
-            from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-            t = SnapshotTable(args.output)
-            if not t.exists():
-                print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-                return 2
-            spec = args.table_changes.split(":")
-            if len(spec) > 2:
-                # arity BEFORE tag resolution, so '1:2:3' (or 'v2:x:3')
-                # gets the grammar error, not a misleading tag lookup
-                print(
-                    f"error: --table-changes wants FROM[:TO] snapshot ids "
-                    f"or tag names, got {args.table_changes!r}",
-                    file=sys.stderr,
-                )
-                return 2
-
-            def bound(s):
-                # a bound is a snapshot id or a TAG name ("what changed
-                # between train-v2 and train-v3"); tags start with a
-                # letter so the grammar is unambiguous
-                return int(s) if s.isdigit() else t.resolve_tag(s)
-
-            try:
-                from_id = bound(spec[0])
-                to_id = bound(spec[1]) if len(spec) > 1 and spec[1] else None
-            except ValueError as e:
-                # invalid tag name / torn tag file — clean message, exit 2
-                if "torn" in str(e):
-                    print(f"error: {e}", file=sys.stderr)
-                else:
-                    print(
-                        f"error: --table-changes wants FROM[:TO] snapshot "
-                        f"ids or tag names, got {args.table_changes!r}",
-                        file=sys.stderr,
-                    )
-                return 2
-            except FileNotFoundError as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            raw_keys = args.table_keys.strip().lower()
-            keys = (
-                None
-                if raw_keys in ("", "none")
-                else tuple(k.strip() for k in args.table_keys.split(",") if k.strip())
-            )
-            try:
-                # resolve "current" ONCE so the printed bound is the one read
-                if to_id is None:
-                    to_id = t.current_id()
-                ch = t.read_changes(spark, from_id, to_id, keys=keys)
-                if args.changes_out is not None:
-                    order = list(keys) if keys else ["_change_type"]
-                    ch.sortWithinPartitions(*order).write.mode(
-                        "overwrite"
-                    ).parquet(args.changes_out)
-                    ch = spark.read.parquet(args.changes_out)
-                counts = {
-                    r["_change_type"]: r["count"]
-                    for r in ch.groupBy("_change_type").count().collect()
-                }
-            # RuntimeError covers SnapshotIntegrityError from diff() —
-            # same exit-2 contract as the other table verbs
-            except (ValueError, FileNotFoundError, RuntimeError) as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            print(
-                json.dumps(
-                    {
-                        "operation": "changes",
-                        "from_snapshot": from_id,
-                        "to_snapshot": to_id,
-                        "counts": counts,
-                        "rows": sum(counts.values()),
-                        "out": args.changes_out,
-                    }
-                )
-            )
-            return 0
-        if args.sync_dag is not None:
-            from pyspark.errors import AnalysisException
-
-            from fscrawler_spark.plans.derived import sync_view_dag
-
-            try:
-                with open(args.sync_dag) as f:
-                    spec = json.load(f)
-            except (OSError, json.JSONDecodeError) as e:
-                print(f"error: cannot read --sync-dag spec: {e}", file=sys.stderr)
-                return 2
-            up_spec = spec.get("upstream") if isinstance(spec, dict) else None
-            views_spec = spec.get("views") if isinstance(spec, dict) else None
-            if not isinstance(up_spec, str) or not isinstance(views_spec, list) \
-                    or not views_spec:
-                print(
-                    'error: --sync-dag spec must be {"upstream": ROOT, '
-                    '"views": [{...}, ...]}',
-                    file=sys.stderr,
-                )
-                return 2
-            default_keys = tuple(
-                k.strip() for k in args.table_keys.split(",") if k.strip()
-            )
-
-            def _rel(p: str) -> str:
-                # relative roots resolve against --output, so one spec
-                # file drives any deployment directory
-                return p if os.path.isabs(p) else os.path.join(args.output, p)
-
-            views = []
-            for v in views_spec:
-                if not isinstance(v, dict):
-                    print(
-                        f"error: --sync-dag views must be objects, got {v!r}",
-                        file=sys.stderr,
-                    )
-                    return 2
-                vf, vs = v.get("filter"), v.get("select")
-                if vf is not None and not isinstance(vf, str):
-                    print(
-                        f"error: view {v.get('name')!r}: 'filter' must be a "
-                        f"SQL expression string, got {vf!r}",
-                        file=sys.stderr,
-                    )
-                    return 2
-                if vs is not None and (
-                    not isinstance(vs, list)
-                    or not all(isinstance(x, str) for x in vs)
-                ):
-                    print(
-                        f"error: view {v.get('name')!r}: 'select' must be a "
-                        "list of SQL expression strings",
-                        file=sys.stderr,
-                    )
-                    return 2
-                vk = v.get("keys")
-                if vk is not None and (
-                    not isinstance(vk, list)
-                    or not all(isinstance(x, str) for x in vk)
-                ):
-                    # a bare string would be iterated per-CHARACTER as
-                    # key columns — refuse with the actual type
-                    print(
-                        f"error: view {v.get('name')!r}: 'keys' must be a "
-                        f"list of column names, got {vk!r}",
-                        file=sys.stderr,
-                    )
-                    return 2
-                vkeys = vk if vk is not None else default_keys
-                entry = {
-                    "name": v.get("name"),
-                    "root": _rel(str(v["root"])) if v.get("root") else v.get("root"),
-                    "upstream": v.get("upstream"),
-                    "keys": vkeys,
-                    "transform": _view_transform(vf, vs, vkeys),
-                }
-                views.append(entry)
-            # --loop/--update-rate are the sync's own knobs here exactly
-            # as on --sync-derived: continuous view-TREE maintenance,
-            # one JSON line per pass, --force-bootstrap first pass only
-            for i in range(args.loop):
-                try:
-                    res = sync_view_dag(
-                        spark,
-                        _rel(up_spec),
-                        views,
-                        keys=default_keys,
-                        force_bootstrap=args.force_bootstrap and i == 0,
-                    )
-                except (
-                    ValueError,
-                    FileNotFoundError,
-                    RuntimeError,
-                    AnalysisException,
-                ) as e:
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-                print(json.dumps({"operation": "sync-dag", "loop": i + 1, "views": res}))
-                if sleep_s and i + 1 < args.loop:
-                    import time as _time
-
-                    _time.sleep(sleep_s)
-            return 0
-        if args.sync_derived is not None:
-            import time as _time
-
-            from pyspark.errors import AnalysisException
-
-            from fscrawler_spark.plans.derived import sync_derived_table
-
-            keys = tuple(k.strip() for k in args.table_keys.split(",") if k.strip())
-            if not keys:
-                print(
-                    "error: --table-keys must name at least one column "
-                    f"(got {args.table_keys!r})",
-                    file=sys.stderr,
-                )
-                return 2
-            # a non-identity view straight from the CLI: the shared
-            # --view-filter/--view-select grammar (_view_transform)
-            transform = _view_transform(args.view_filter, args.view_select, keys)
-
-            # --loop N --update-rate T = continuous materialized-view
-            # maintenance (the crawl loop's analog for the derived tier):
-            # one JSON line per sync; --force-bootstrap applies to the
-            # FIRST sync only (rebuild once, then deltas)
-            for i in range(args.loop):
-                try:
-                    res = sync_derived_table(
-                        spark,
-                        args.sync_derived,
-                        args.output,
-                        transform=transform,
-                        keys=keys,
-                        force_bootstrap=args.force_bootstrap and i == 0,
-                    )
-                except (
-                    ValueError,
-                    FileNotFoundError,
-                    RuntimeError,
-                    AnalysisException,
-                ) as e:
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-                res["operation"] = "sync-derived"
-                res["loop"] = i + 1
-                print(json.dumps(res))
-                if sleep_s and i + 1 < args.loop:
-                    _time.sleep(sleep_s)
-            return 0
-        if args.table_upsert is not None or args.table_delete is not None:
-            from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-            t = SnapshotTable(args.output)
-            if not t.exists():
-                print(f"error: no snapshot table at {args.output}", file=sys.stderr)
-                return 2
-            keys = tuple(k.strip() for k in args.table_keys.split(",") if k.strip())
-            if not keys:
-                print(
-                    "error: --table-keys must name at least one column "
-                    f"(got {args.table_keys!r})",
-                    file=sys.stderr,
-                )
-                return 2
-            try:
-                if args.table_upsert is not None:
-                    res = t.upsert(spark, spark.read.parquet(args.table_upsert), keys=keys)
-                    res["operation"] = "upsert"
-                else:
-                    res = t.delete_rows(
-                        spark, spark.read.parquet(args.table_delete), keys=keys
-                    )
-                    res["operation"] = "delete"
-            except (ValueError, FileNotFoundError) as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            print(json.dumps(res))
-            return 0
-        if curation_verbs:
-            docs, err = _read_docs_table(spark, args.input)
-            if err:
-                print(f"error: {err}", file=sys.stderr)
-                return 2
-        if args.chunk is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.curation import chunk_documents
-
-            chunks = chunk_documents(
-                docs,
-                id_col="doc_id",
-                text_col="extracted",
-                max_tokens=args.chunk,
-                stride=args.chunk_stride,
-            ).withColumnsRenamed({"id": "doc_id", "chunk_text": "extracted"})
-            # one output row per chunk, original metadata re-attached
-            out = docs.drop("extracted").join(chunks, "doc_id")
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order, "chunk_idx").write.mode(
-                "overwrite"
-            ).parquet(args.output)
-            written = spark.read.parquet(args.output)
-            stats = written.agg(
-                F.count(F.lit(1)).alias("chunks"),
-                F.count_distinct("doc_id").alias("docs"),
-                F.max("n_tokens").alias("widest"),
-            ).collect()[0]
-            print(json.dumps({
-                "chunk": args.chunk,
-                "stride": args.chunk_stride or args.chunk,
-                "docs": stats["docs"],
-                "chunks": stats["chunks"],
-                "max_chunk_tokens": stats["widest"],
-                "output": args.output,
-            }))
-            return 0
-        if args.embed is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.embeddings import text_embeddings
-
-            emb = text_embeddings(
-                docs,
-                id_col="doc_id",
-                text_col="extracted",
-                dim=args.embed,
-                ngrams=args.embed_ngrams or 1,
-            )
-            # the vector stack's centroid path (--semantic-dedup / IVF)
-            # requires INTEGER ids; extraction doc_ids are strings, so
-            # emit a deterministic int64 surrogate and keep doc_id
-            # alongside for mapping results back (collision budget
-            # n^2/2^65 — the same one hashed_shingles accepts)
-            id_type = dict(docs.dtypes).get("doc_id")
-            if id_type not in ("tinyint", "smallint", "int", "bigint"):
-                emb = emb.select(
-                    F.xxhash64("vec_id").alias("vec_id"),
-                    F.col("vec_id").alias("doc_id"),
-                    "embedding",
-                )
-            emb.sortWithinPartitions("vec_id").write.mode("overwrite").parquet(
-                args.output
-            )
-            written = spark.read.parquet(args.output)
-            stats = written.agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.count_distinct("vec_id").alias("ids"),
-                F.sum(
-                    (
-                        F.aggregate(
-                            "embedding", F.lit(0.0), lambda a, x: a + F.abs(x)
-                        )
-                        > 0
-                    ).cast("long")
-                ).alias("nonzero"),
-            ).collect()[0]
-            print(json.dumps({
-                "embed": args.embed,
-                "ngrams": args.embed_ngrams or 1,
-                "docs": stats["docs"],
-                # ids < docs would mean surrogate collisions — surfaced,
-                # not silently absorbed
-                "distinct_vec_ids": stats["ids"],
-                # zero vectors = NULL/blank extractions; they can never
-                # semantic-match anything downstream
-                "nonzero_vectors": int(stats["nonzero"] or 0),
-                "output": args.output,
-            }))
-            return 0
-        if args.redact_pii:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.curation import (
-                PII_PATTERNS,
-                pii_counts,
-                redact_pii,
-            )
-
-            kinds = tuple(args.pii_kinds.split(",")) if args.pii_kinds else None
-            # audit BEFORE redacting: pii_found counts every kind on the
-            # original text even when only a subset is redacted
-            out = docs.withColumn(
-                "pii_found", pii_counts(F.col("extracted"))
-            ).withColumn("extracted", redact_pii(F.col("extracted"), kinds))
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            written = spark.read.parquet(args.output)
-            per_kind = [
-                F.sum(F.element_at("pii_found", k)).alias(k)
-                for k, _p, _t in PII_PATTERNS
-            ]
-            stats = written.agg(F.count(F.lit(1)).alias("docs"), *per_kind).collect()[0]
-            print(json.dumps({
-                "redact_pii": True,
-                "kinds_redacted": sorted(kinds) if kinds else sorted(
-                    k for k, _p, _t in PII_PATTERNS
-                ),
-                "docs": stats["docs"],
-                "found": {
-                    k: int(stats[k] or 0) for k, _p, _t in PII_PATTERNS
-                },
-                "output": args.output,
-            }))
-            return 0
-        if args.assemble or args.sft_pairs or args.pref_pairs:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.assembly import (
-                assemble_conversations,
-                preference_pairs,
-                sft_examples,
-            )
-
-            missing = [c for c in ("conv_id", "turn_idx", "role") if c not in docs.columns]
-            if missing:
-                print(
-                    f"error: assembly verbs need conv_id/turn_idx/role on the "
-                    f"docs table; missing {missing}",
-                    file=sys.stderr,
-                )
-                return 2
-            tool_kw = {"tool_col": "tool"} if args.assemble_tools else {}
-            if args.assemble_tools and "tool" not in docs.columns:
-                print(
-                    "error: --assemble-tools needs a tool column on the docs "
-                    "table",
-                    file=sys.stderr,
-                )
-                return 2
-            if args.assemble:
-                out = assemble_conversations(
-                    docs, text_col="extracted",
-                    max_turns=args.assemble_max_turns,
-                    spans_role=args.assemble_spans, **tool_kw
-                )
-                out.sortWithinPartitions("conv_id").write.mode("overwrite").parquet(
-                    args.output
-                )
-                written = spark.read.parquet(args.output)
-                aggs = [
-                    F.count(F.lit(1)).alias("convs"),
-                    F.sum("n_turns").alias("turns"),
-                    F.sum("n_chars").alias("chars"),
-                ]
-                if args.assemble_spans is not None:
-                    aggs.append(F.sum(F.size("train_spans")).alias("spans"))
-                stats = written.agg(*aggs).collect()[0]
-                line = {
-                    "assemble": True,
-                    "max_turns": args.assemble_max_turns,
-                    "conversations": stats["convs"],
-                    "turns_kept": int(stats["turns"] or 0),
-                    "chars": int(stats["chars"] or 0),
-                    "output": args.output,
-                }
-                if args.assemble_spans is not None:
-                    line["spans_role"] = args.assemble_spans
-                    line["train_spans"] = int(stats["spans"] or 0)
-                print(json.dumps(line))
-            elif args.pref_pairs:
-                sft_role = args.sft_role if args.sft_role is not None else "assistant"
-                sft_context = args.sft_context if args.sft_context is not None else 8
-                margin = args.pref_margin if args.pref_margin is not None else 0.0
-                ex = sft_examples(
-                    docs,
-                    text_col="extracted",
-                    target_role=sft_role,
-                    context_turns=sft_context,
-                    **tool_kw,
-                )
-                out = preference_pairs(ex, min_margin=margin)
-                out.sortWithinPartitions("prompt").write.mode("overwrite").parquet(
-                    args.output
-                )
-                written = spark.read.parquet(args.output)
-                stats = written.agg(
-                    F.count(F.lit(1)).alias("pairs"),
-                    F.sum("n_candidates").alias("cands"),
-                    F.avg(
-                        F.col("chosen_score") - F.col("rejected_score")
-                    ).alias("gap"),
-                ).collect()[0]
-                print(json.dumps({
-                    "pref_pairs": True,
-                    "role": sft_role,
-                    "context_turns": sft_context,
-                    "min_margin": margin,
-                    "pairs": stats["pairs"],
-                    "candidates": int(stats["cands"] or 0),
-                    "mean_gap": round(float(stats["gap"]), 6) if stats["gap"] is not None else None,
-                    "output": args.output,
-                }))
-            else:
-                sft_role = args.sft_role if args.sft_role is not None else "assistant"
-                sft_context = args.sft_context if args.sft_context is not None else 8
-                out = sft_examples(
-                    docs,
-                    text_col="extracted",
-                    target_role=sft_role,
-                    context_turns=sft_context,
-                    **tool_kw,
-                )
-                out.sortWithinPartitions("conv_id", "turn_idx").write.mode(
-                    "overwrite"
-                ).parquet(args.output)
-                written = spark.read.parquet(args.output)
-                stats = written.agg(
-                    F.count(F.lit(1)).alias("examples"),
-                    F.count_distinct("conv_id").alias("convs"),
-                    F.sum(F.length("prompt") + F.length("response")).alias("chars"),
-                ).collect()[0]
-                print(json.dumps({
-                    "sft_pairs": True,
-                    "role": sft_role,
-                    "context_turns": sft_context,
-                    "examples": stats["examples"],
-                    "conversations": stats["convs"],
-                    "chars": int(stats["chars"] or 0),
-                    "output": args.output,
-                }))
-            return 0
-        if args.clean_text:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.normalize import clean_text, mojibake_score
-
-            out = docs.withColumn(
-                "moji_before", mojibake_score(F.col("extracted"))
-            ).withColumn("extracted", clean_text(F.col("extracted")))
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            written = spark.read.parquet(args.output)
-            stats = written.agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("moji_before").alias("moji"),
-                F.sum(mojibake_score(F.col("extracted"))).alias("moji_after"),
-            ).collect()[0]
-            print(json.dumps({
-                "clean_text": True,
-                "docs": stats["docs"],
-                "mojibake_before": int(stats["moji"] or 0),
-                "mojibake_after": int(stats["moji_after"] or 0),
-                "output": args.output,
-            }))
-            return 0
-        if args.c4_filter:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.curation import c4_quality_flags
-
-            q4 = c4_quality_flags(
-                "extracted",
-                min_sentences=(
-                    3 if args.c4_min_sentences is None else args.c4_min_sentences
-                ),
-            )
-
-            def _swap_in_cleaned(out):
-                return out.withColumn(
-                    "extracted", F.col("_q.cleaned_text")
-                ).withColumn(
-                    "c4_lines_removed",
-                    F.col("_q.n_lines") - F.col("_q.n_lines_kept"),
-                )
-
-            def _lines_removed(written):
-                n = written.agg(F.sum("c4_lines_removed")).collect()[0][0] or 0
-                return {"lines_removed_in_kept": int(n)}
-
-            # re-filtering a previous --c4-filter output: drop its stale
-            # audit column before re-attaching
-            return _run_quality_filter(
-                spark, docs.drop("c4_lines_removed"), args, "c4_filter", q4,
-                keep_cols=_swap_in_cleaned, extra_stats=_lines_removed,
-            )
-        if args.gopher_filter:
-            from fscrawler_spark.functions.curation import gopher_quality_flags
-
-            return _run_quality_filter(
-                spark, docs, args, "gopher_filter",
-                gopher_quality_flags("extracted"),
-            )
-        if args.report:
-            from fscrawler_spark.plans.report import corpus_report
-
-            group = args.report_group or "mime"
-            try:
-                rep = corpus_report(docs, group_col=group)
-            except ValueError as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            rep.orderBy("group").write.mode("overwrite").parquet(args.output)
-            rows = [
-                r.asDict() for r in
-                spark.read.parquet(args.output).orderBy("group").collect()
-            ]
-            print(json.dumps({
-                "report": True,
-                "group_col": group,
-                "groups": len(rows) - 1,  # minus the <all> row
-                "rows": rows,
-                "output": args.output,
-            }))
-            return 0
-        if args.export is not None:
-            from fscrawler_spark.functions.export import export_shards, verify_export
-
-            if args.export_curriculum is not None and (
-                args.export_curriculum not in docs.columns
-            ):
-                print(
-                    f"error: --export-curriculum column "
-                    f"{args.export_curriculum!r} not on the docs table",
-                    file=sys.stderr,
-                )
-                return 2
-            stats = export_shards(
-                docs, args.output, n_shards=args.export,
-                id_col="doc_id", seed=args.export_seed, text_col="extracted",
-                fmt=args.export_format, stage_col=args.export_curriculum,
-            )
-            problems = verify_export(spark, args.output)
-            print(json.dumps({
-                "export": True,
-                "shards": stats["shards"],
-                "rows": stats["rows"],
-                "seed": args.export_seed,
-                "format": args.export_format,
-                "curriculum": args.export_curriculum,
-                "verify_findings": problems,
-                "output": args.output,
-            }))
-            return 0 if not problems else 1
-        if args.dedup_spans is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.exact_substr import strip_duplicate_spans
-
-            before = docs.select(F.sum(F.length("extracted"))).collect()[0][0] or 0
-            out = strip_duplicate_spans(
-                docs,
-                id_col="doc_id",
-                text_col="extracted",
-                min_len=args.dedup_spans,
-                cross_doc_only=True,
-            )
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            written = spark.read.parquet(args.output)
-            after = written.select(F.sum(F.length("extracted"))).collect()[0][0] or 0
-            print(json.dumps({
-                "dedup_spans": args.dedup_spans,
-                "docs": written.count(),
-                "chars_removed": int(before - after),
-                "output": args.output,
-            }))
-            return 0
-        if args.dedup_lines is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.curation import strip_repeated_lines
-
-            curated = strip_repeated_lines(
-                docs, id_col="doc_id", text_col="extracted", min_docs=args.dedup_lines
-            ).withColumnsRenamed({"id": "doc_id", "text": "extracted"})
-            # keep the full original row; only `extracted` is replaced
-            out = docs.drop("extracted").join(curated, "doc_id")
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            removed = out.agg(F.sum("removed_lines")).collect()[0][0] or 0
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            print(json.dumps({
-                "dedup_lines": args.dedup_lines,
-                "docs": out.count(),
-                "removed_lines_total": int(removed),
-                "output": args.output,
-            }))
-            return 0
-        if args.mix is not None or args.mix_budget is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions import mixing
-
-            if args.mix_group not in docs.columns:
-                print(
-                    f"error: --mix-group column {args.mix_group!r} not in "
-                    f"docs table (has {docs.columns})",
-                    file=sys.stderr,
-                )
-                return 2
-            try:
-                if args.mix is not None:
-                    out = mixing.mix_corpus(
-                        docs, args.mix_group, mix_rates, key_col="doc_id",
-                        default_rate=args.mix_default,
-                    )
-                    rates = mix_rates
-                else:
-                    from fscrawler_spark.functions.text_analysis import token_count
-
-                    out, rates = mixing.sample_to_token_budget(
-                        docs.withColumn("_tok", token_count(F.col("extracted"))),
-                        args.mix_group, "_tok", args.mix_budget, key_col="doc_id",
-                    )
-                    out = out.drop("_tok")
-            except ValueError as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order, "epoch").write.mode("overwrite").parquet(
-                args.output
-            )
-            written = spark.read.parquet(args.output)
-            groups = {
-                ("<null>" if r["g"] is None else str(r["g"])): r["n"]
-                for r in written.groupBy(F.col(args.mix_group).alias("g"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            print(json.dumps({
-                "mix_group": args.mix_group,
-                "rates": rates,
-                "rows": sum(groups.values()),
-                "rows_by_group": groups,
-                "output": args.output,
-            }))
-            return 0
-        if args.dsir_select is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions import mixing
-
-            target, terr = _read_docs_table(spark, args.dsir_target)
-            if terr:
-                print(f"error: --dsir-target: {terr}", file=sys.stderr)
-                return 2
-            # fused train+select path: one gram pass over the corpus
-            # (mixing.dsir_select) instead of the modular two-pass
-            picked = mixing.dsir_select(
-                docs, target, k=args.dsir_select, text_col="extracted", id_col="doc_id"
-            ).withColumnsRenamed({"id": "doc_id"})
-            # re-selecting from a previous dsir output: drop its stale
-            # audit columns before re-attaching (COLUMN_ALREADY_EXISTS)
-            out = docs.drop("log_weight", "sample_key").join(picked, "doc_id")
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            written = spark.read.parquet(args.output)
-            stats = written.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("log_weight").alias("lo"),
-                F.max("log_weight").alias("hi"),
-            ).collect()[0]
-            print(json.dumps({
-                "dsir_select": args.dsir_select,
-                "selected": stats["n"],
-                "log_weight_min": stats["lo"],
-                "log_weight_max": stats["hi"],
-                "output": args.output,
-            }))
-            return 0
-        if args.quality_filter is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.quality_classifier import (
-                classify_quality,
-                train_quality_classifier,
-            )
-
-            pos, perr = _read_docs_table(spark, args.quality_pos)
-            if perr:
-                print(f"error: --quality-pos: {perr}", file=sys.stderr)
-                return 2
-            neg, nerr = _read_docs_table(spark, args.quality_neg)
-            if nerr:
-                print(f"error: --quality-neg: {nerr}", file=sys.stderr)
-                return 2
-            try:
-                model = train_quality_classifier(pos, neg, text_col="extracted")
-            except ValueError as e:
-                print(f"error: --quality-filter: {e}", file=sys.stderr)
-                return 2
-            scored = classify_quality(
-                docs, model, text_col="extracted", threshold=args.quality_filter
-            )
-            total = docs.count()
-            # re-filtering a previous quality-filter output is a natural
-            # workflow: drop its stale audit column before re-attaching
-            out = docs.drop("log_odds").join(
-                scored.filter("keep").select("doc_id", "log_odds"), "doc_id"
-            )
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            written = spark.read.parquet(args.output)
-            stats = written.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("log_odds").alias("lo"),
-                F.max("log_odds").alias("hi"),
-            ).collect()[0]
-            print(json.dumps({
-                "quality_filter": args.quality_filter,
-                "prior_log_odds": model.prior_log_odds,
-                "total": total,
-                "kept": stats["n"],
-                "log_odds_min": stats["lo"],
-                "log_odds_max": stats["hi"],
-                "output": args.output,
-            }))
-            return 0
-        if args.decontaminate is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.curation import decontaminate
-
-            bench, berr = _read_docs_table(spark, args.decontaminate)
-            if berr:
-                print(f"error: --decontaminate: {berr}", file=sys.stderr)
-                return 2
-            total = docs.count()
-            max_bench = (
-                args.decon_max_benchmark
-                if args.decon_max_benchmark is not None
-                else 100_000
-            )
-            if args.decon_semantic is not None:
-                from fscrawler_spark.functions.curation import semantic_decontaminate
-
-                try:
-                    out = semantic_decontaminate(
-                        docs,
-                        bench,
-                        id_col="doc_id",
-                        text_col="extracted",
-                        bench_id_col="doc_id",
-                        bench_text_col="extracted",
-                        threshold=args.decon_semantic,
-                        dim=args.decon_dim if args.decon_dim is not None else 256,
-                        max_benchmark=max_bench,
-                    )
-                except ValueError as e:
-                    # oversized benchmark / bad threshold: the documented
-                    # exit-2-with-message contract, not a traceback
-                    print(f"error: --decon-semantic: {e}", file=sys.stderr)
-                    return 2
-                stats_extra = {
-                    "semantic_cosine": args.decon_semantic,
-                    "dim": args.decon_dim if args.decon_dim is not None else 256,
-                }
-            elif args.decon_fuzzy is not None:
-                from fscrawler_spark.functions.curation import fuzzy_decontaminate
-
-                try:
-                    out = fuzzy_decontaminate(
-                        docs,
-                        bench,
-                        id_col="doc_id",
-                        text_col="extracted",
-                        bench_id_col="doc_id",
-                        bench_text_col="extracted",
-                        threshold=args.decon_fuzzy,
-                        max_benchmark=max_bench,
-                    )
-                except ValueError as e:
-                    print(f"error: --decon-fuzzy: {e}", file=sys.stderr)
-                    return 2
-                stats_extra = {"fuzzy_jaccard": args.decon_fuzzy}
-            else:
-                out = decontaminate(
-                    docs,
-                    bench,
-                    id_col="doc_id",
-                    text_col="extracted",
-                    bench_id_col="doc_id",
-                    bench_text_col="extracted",
-                    n=args.decon_ngrams if args.decon_ngrams is not None else 8,
-                    min_hits=args.decon_min_hits if args.decon_min_hits is not None else 2,
-                )
-                stats_extra = {
-                    "ngrams": args.decon_ngrams if args.decon_ngrams is not None else 8,
-                    "min_hits": args.decon_min_hits if args.decon_min_hits is not None else 2,
-                }
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            kept = spark.read.parquet(args.output).count()
-            print(json.dumps({
-                "decontaminate": True,
-                **stats_extra,
-                "total": total,
-                "kept": kept,
-                "dropped": total - kept,
-                "output": args.output,
-            }))
-            return 0
-        if args.ppl_filter is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.lm_quality import (
-                perplexity_buckets,
-                train_char_lm,
-                train_word_lm,
-            )
-
-            seed = docs
-            if args.ppl_target is not None:
-                seed, terr = _read_docs_table(spark, args.ppl_target)
-                if terr:
-                    print(f"error: --ppl-target: {terr}", file=sys.stderr)
-                    return 2
-            train = train_word_lm if args.ppl_model == "word" else train_char_lm
-            try:
-                lm = train(seed, text_col="extracted")
-            except ValueError as e:
-                print(f"error: --ppl-filter: {e}", file=sys.stderr)
-                return 2
-            total = docs.count()
-            # re-filtering a previous ppl-filter output: drop its stale
-            # audit columns before re-attaching
-            bucketed = perplexity_buckets(
-                docs.drop("ppl", "ppl_bucket"), lm,
-                text_col="extracted", cuts=ppl_cuts,
-            )
-            by_bucket = {
-                ("<null>" if r["b"] is None else r["b"]): r["n"]
-                for r in bucketed.groupBy(F.col("ppl_bucket").alias("b"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            out = bucketed.filter(F.col("ppl_bucket").isin(ppl_keep))
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(args.output)
-            kept = spark.read.parquet(args.output).count()
-            print(json.dumps({
-                "ppl_filter": ppl_keep,
-                "model": args.ppl_model,
-                "cuts": list(ppl_cuts),
-                "trained_on": args.ppl_target or "input",
-                "total": total,
-                "kept": kept,
-                "by_bucket": by_bucket,
-                "output": args.output,
-            }))
-            return 0
-        if args.tokenize is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions.bpe import (
-                bpe_encode,
-                merges_table,
-                train_bpe,
-            )
-
-            if args.bpe_merges is not None:
-                try:
-                    mt = spark.read.parquet(args.bpe_merges)
-                    rows = mt.orderBy("rank").select("left", "right").collect()
-                except Exception as e:
-                    print(
-                        f"error: --bpe-merges: cannot read merges table at "
-                        f"{args.bpe_merges}: {e}",
-                        file=sys.stderr,
-                    )
-                    return 2
-                merges = [(r["left"], r["right"]) for r in rows][: args.tokenize]
-            else:
-                merges = train_bpe(docs, text_col="extracted", num_merges=args.tokenize)
-            # re-tokenizing a previous output: drop its stale audit columns
-            out = bpe_encode(
-                docs.drop("bpe_tokens", "n_bpe_tokens"), merges, text_col="extracted"
-            ).withColumn(
-                "n_bpe_tokens",
-                F.when(
-                    F.col("bpe_tokens").isNull(), F.lit(None).cast("int")
-                ).otherwise(F.size("bpe_tokens")),
-            )
-            order = [c for c in ("conv_id", "turn_idx") if c in out.columns] or ["doc_id"]
-            out.sortWithinPartitions(*order).write.mode("overwrite").parquet(
-                os.path.join(args.output, "docs")
-            )
-            merges_table(spark, merges).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(args.output, "merges")
-            )
-            written = spark.read.parquet(os.path.join(args.output, "docs"))
-            stats = written.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("n_bpe_tokens").alias("toks"),
-            ).collect()[0]
-            print(json.dumps({
-                "tokenize": args.tokenize,
-                "merges": len(merges),
-                "trained": args.bpe_merges is None,
-                "rows": stats["n"],
-                "total_tokens": stats["toks"],
-                "output": args.output,
-            }))
-            return 0
-        if args.semantic_dedup is not None:
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.functions import embeddings as emb_ops
-
-            try:
-                vecs = spark.read.parquet(args.input)
-            except Exception as e:
-                print(
-                    f"error: cannot read embeddings table at {args.input}: {e}",
-                    file=sys.stderr,
-                )
-                return 2
-            if "vec_id" not in vecs.columns or "embedding" not in vecs.columns:
-                print(
-                    f"error: {args.input} is not an embeddings table "
-                    f"(needs vec_id + embedding; has {vecs.columns})",
-                    file=sys.stderr,
-                )
-                return 2
-            n_corpus = vecs.count()
-            if n_corpus == 0:
-                # sampled_centroids on an empty table would hand numpy a
-                # zero-row matrix (AxisError traceback); the CLI contract
-                # is a clean message + exit 2
-                print(
-                    f"error: embeddings table at {args.input} is empty",
-                    file=sys.stderr,
-                )
-                return 2
-            n_cells = args.semantic_cells
-            if n_cells is None:
-                n_cells = max(16, min(65536, n_corpus // 512))
-            out = emb_ops.semantic_dedup(
-                vecs, n_cells=n_cells, threshold=args.semantic_dedup
-            )
-            out.sortWithinPartitions("cluster_id", "id").write.mode(
-                "overwrite"
-            ).parquet(args.output)
-            written = spark.read.parquet(args.output)
-            stats = written.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("cluster_id").alias("clusters"),
-            ).collect()[0]
-            print(json.dumps({
-                "semantic_dedup": args.semantic_dedup,
-                "n_cells": n_cells,
-                "clustered_vectors": stats["n"],
-                "clusters": stats["clusters"],
-                "output": args.output,
-            }))
-            return 0
-        if (args.near_dup or args.assemble_store) and not args.input:
-            # standalone: tick EVERY requested store over the existing
-            # output — returning after the first would silently skip the
-            # other, the exact failure mode the exclusivity guards exist
-            # to prevent. Crawl-shaped flags need --input; dropping them
-            # here would be the same silent skip.
-            if args.incremental or args.restart or args.loop != 1 or args.update_rate:
-                print(
-                    "error: standalone store ticks take only --output; "
-                    "--incremental/--restart/--loop/--update-rate need --input",
-                    file=sys.stderr,
-                )
-                return 2
-            ticks: dict = {}
-            try:
-                if args.near_dup:
-                    from fscrawler_spark.plans.dedup_store import dedup_tick
-
-                    ticks["near_dup"] = dedup_tick(
-                        spark, args.output, threshold=args.near_dup_threshold
-                    )
-                if args.assemble_store:
-                    from fscrawler_spark.plans.assembly_store import assembly_tick
-
-                    ticks["assembled"] = assembly_tick(
-                        spark, args.output, max_turns=args.assemble_max_turns,
-                        tool_col="tool" if args.assemble_tools else None,
-                    )
-            except (FileNotFoundError, RuntimeError, ValueError) as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            print(json.dumps(ticks))
-            return 0
-        if args.compact:
-            from fscrawler_spark.streaming.micro_batch import compact_streaming_output
-
-            try:
-                res = compact_streaming_output(spark, args.input, args.output, settings)
-            except (FileNotFoundError, RuntimeError, ValueError) as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 2
-            print(json.dumps(res))
-            return 0
-        if args.dry_run:
-            if args.incremental:
-                # preview the TICK's plan, not a full-corpus extraction:
-                # the real delta (checksum anti-join + deletions) is what
-                # "would write" — full-corpus counts would be wildly wrong
-                from fscrawler_spark.plans.pipeline import run_incremental_update
-
-                try:
-                    res = run_incremental_update(
-                        spark, args.input, args.output, settings, dry_run=True,
-                        layout=args.layout,
-                    )
-                except (FileNotFoundError, RuntimeError, ValueError) as e:
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-                print(json.dumps(res))
-                return 0
-            from pyspark.sql import functions as F
-
-            from fscrawler_spark.operators.extract import extract_transcripts
-            from fscrawler_spark.sources.transcripts import read_transcripts
-
-            docs = extract_transcripts(read_transcripts(spark, args.input), settings)
-            docs.explain("formatted")
-            counts = docs.groupBy("mime").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
-            )
-            print(json.dumps({"dry_run": True, "by_mime": {r["mime"]: [r["n"], r["errors"]] for r in counts.collect()}}))
-            return 0
-        if args.restart:
-            from fscrawler_spark.plans.pipeline import restart_clean
-
-            restart_clean(args.output, spark=spark)
-        for i in range(args.loop):
-            if args.incremental:
-                from fscrawler_spark.plans.pipeline import run_incremental_update
-
-                try:
-                    res = run_incremental_update(
-                        spark, args.input, args.output, settings, layout=args.layout,
-                        publish_table=args.publish_table,
-                    )
-                except (FileNotFoundError, RuntimeError, ValueError) as e:
-                    # ValueError covers SettingsMismatchError (drifted
-                    # settings vs the manifest fingerprint)
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-            else:
-                try:
-                    res = run_extraction_job(
-                        spark, args.input, args.output, settings,
-                        publish_table=args.publish_table,
-                    )
-                except (FileNotFoundError, RuntimeError, ValueError) as e:
-                    # ValueError covers SettingsMismatchError: a resume
-                    # with drifted settings gets the same clean exit-2
-                    # contract as the --incremental branch, not a traceback
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-            if args.near_dup:
-                from fscrawler_spark.plans.dedup_store import dedup_tick
-
-                try:
-                    res["near_dup"] = dedup_tick(
-                        spark, args.output, threshold=args.near_dup_threshold
-                    )
-                except (FileNotFoundError, RuntimeError, ValueError) as e:
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-            if args.assemble_store:
-                from fscrawler_spark.plans.assembly_store import assembly_tick
-
-                try:
-                    res["assembled"] = assembly_tick(
-                        spark, args.output, max_turns=args.assemble_max_turns,
-                        tool_col="tool" if args.assemble_tools else None,
-                    )
-                except (FileNotFoundError, RuntimeError, ValueError) as e:
-                    print(f"error: {e}", file=sys.stderr)
-                    return 2
-            print(json.dumps({"loop": i + 1, **{k: v for k, v in res.items() if k != "output"}}))
-            if sleep_s is not None:
-                from fscrawler_spark.plans.pipeline import schedule_next_check
-
-                # persist when the next run is due (nextCheck analog);
-                # a delete-heavy tick schedules HALF the update rate so
-                # follow-up deletions are noticed sooner — and any
-                # external actor can pull next_check forward to wake the
-                # sleeping loop below early
-                delay = sleep_s / 2 if (args.incremental and res.get("deleted")) else sleep_s
-                schedule_next_check(args.output, delay)
-            if sleep_s and i + 1 < args.loop:
-                from fscrawler_spark.plans.pipeline import sleep_until_next_run
-
-                reason = sleep_until_next_run(args.output, sleep_s)
-                if reason != "timeout":
-                    print(json.dumps({"woke_early": reason}))
+        docs = _read_docs_table(spark, args.input) if verb.input == "docs" else None
+        return verb.run(spark, args, docs)
+    except (CliError, ValueError, FileNotFoundError, RuntimeError, AnalysisException) as e:
+        # a table, spec or input found unusable at run time, or the
+        # library's own refusal (SettingsMismatchError,
+        # SnapshotIntegrityError, a bad view expression, ...)
+        print(f"error: {e}", file=sys.stderr)
+        return 2
     finally:
         if rest_server is not None:
             rest_server.stop()
         if owns_session and spark is not None:
             spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

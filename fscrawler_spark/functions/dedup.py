@@ -642,10 +642,10 @@ def near_dup_pipeline(
         raise ValueError(f"hash_family must be 'fast' or 'md5', got {hash_family!r}")
     sig_fn = minhash_signatures_fast if hash_family == "fast" else minhash_signatures
     sigs = sig_fn(df, id_col=id_col, text_col=text_col, num_hashes=num_hashes)
-    # verify_candidates materializes the candidate plan and size-gates a
-    # broadcast of the pair set (its docstring) — the round-4 live-vs-
-    # materialized A/B predates the vectorized signature stage that made
-    # the candidate subtree cheap enough for this to flip.
+    # verify_candidates materializes the candidate pair set and joins it
+    # through a shuffle, never a broadcast (its docstring: the broadcast
+    # was tried and rejected) — the earlier live-vs-materialized A/B
+    # predates the vectorized signature stage that flipped it.
     cands = lsh_candidate_pairs(sigs, num_hashes=num_hashes, bands=bands, max_bucket=max_bucket)
     verified = verify_candidates(df, cands, id_col=id_col, text_col=text_col, threshold=threshold)
     clusters = connected_components(verified)

@@ -71,6 +71,7 @@ from fscrawler_spark.plans.snapshot_table import (
     SchemaRewriteError,
     SnapshotTable,
 )
+from fscrawler_spark.session import materialize
 
 # summary keys the sync stamps on every derived commit (cursor +
 # provenance); live in the manifest top level like publish's run_id.
@@ -182,15 +183,15 @@ def sync_derived_table(
             "derived_snapshot": dv.current_id(),
         }
     try:
-        # localCheckpoint: the changelog's keyed full-outer join (and the
-        # caller's transform below) feed FOUR+ downstream actions (two
-        # counts, apply_delta's key probes + touched-file collect + the
-        # staging write) — materialize each delta-sized frame ONCE
-        # instead of re-reading the diffed files and re-shuffling per
-        # action. Delta-sized by construction, so the executor-local
-        # storage is bounded; a lost executor fails the sync, which is
+        # the changelog's keyed full-outer join (and the caller's
+        # transform below) feed FOUR+ downstream actions (two counts,
+        # apply_delta's key probes + touched-file collect + the staging
+        # write) — materialize each delta-sized frame ONCE instead of
+        # re-reading the diffed files and re-shuffling per action.
+        # session.materialize is durable when a checkpoint dir is set;
+        # without one a lost executor fails the sync, which is
         # idempotently re-runnable.
-        ch = up.read_changes(spark, base, cur, keys=keys).localCheckpoint()
+        ch = materialize(up.read_changes(spark, base, cur, keys=keys))
     except FileNotFoundError:
         # the cursor snapshot expired upstream — the range cannot be
         # diffed anymore; the view must be rebuilt
@@ -203,7 +204,7 @@ def sync_derived_table(
     ).drop(*drop)
     out = fn(post)
     _validate_transform_output(out, keys)  # column check BEFORE any job
-    out = out.localCheckpoint()
+    out = materialize(out)
     # a filtering transform: UPDATE-postimage keys the transform dropped
     # must be DELETED downstream, or an update that now fails the filter
     # leaves its old derived row stale forever. Filtered-out INSERTs are

@@ -55,6 +55,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from fscrawler_spark.session import materialize
+
 SNAP_DIR = "_snap"
 DATA_DIR = "data"
 _V_RE = re.compile(r"^v(\d{8})\.json$")
@@ -337,17 +339,20 @@ def _widen_null_flags(a: T.DataType, b: T.DataType) -> T.DataType:
     return a
 
 
-def _needs_canon(dt: T.DataType) -> bool:
+def _needs_canon(dt: T.DataType, floats: bool = False) -> bool:
     """True when a value of this type can be logically equal but
     binary-unequal — i.e. it contains a map anywhere (Spark maps carry
     insertion order, and parquet round-trips it, so the same logical map
-    can surface with entries in different orders)."""
+    can surface with entries in different orders), or, with ``floats``,
+    a float/double anywhere (-0.0 == 0.0 but serializes apart)."""
     if isinstance(dt, T.MapType):
         return True
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return floats
     if isinstance(dt, T.ArrayType):
-        return _needs_canon(dt.elementType)
+        return _needs_canon(dt.elementType, floats)
     if isinstance(dt, T.StructType):
-        return any(_needs_canon(f.dataType) for f in dt.fields)
+        return any(_needs_canon(f.dataType, floats) for f in dt.fields)
     return False
 
 
@@ -355,14 +360,16 @@ def _canon_expr(col, dt: T.DataType):
     """Order-canonical comparison form of ``col``: every map at any
     nesting depth becomes its ``array_sort(map_entries(...))`` — a
     comparable type (Spark refuses equality on MapType outright) with a
-    deterministic entry order. Non-map-bearing subtrees pass through
-    untouched, so the expression stays a pure codegen projection and a
-    no-op for map-free columns."""
+    deterministic entry order — and every float/double becomes
+    ``x + 0.0`` (IEEE: -0.0 + 0.0 = 0.0; NaN and NULL pass through), so
+    a hash over it cannot tell -0.0 from 0.0. Subtrees with neither pass
+    through untouched, so the expression stays a pure codegen projection
+    and a no-op for such columns."""
     from pyspark.sql import functions as F
 
     if isinstance(dt, T.MapType):
         entries = F.map_entries(col)
-        if _needs_canon(dt.keyType) or _needs_canon(dt.valueType):
+        if _needs_canon(dt.keyType, True) or _needs_canon(dt.valueType, True):
             entries = F.transform(
                 entries,
                 lambda e: F.struct(
@@ -371,9 +378,11 @@ def _canon_expr(col, dt: T.DataType):
                 ),
             )
         return F.array_sort(entries)
-    if isinstance(dt, T.ArrayType) and _needs_canon(dt.elementType):
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return col + F.lit(0.0).cast(dt)
+    if isinstance(dt, T.ArrayType) and _needs_canon(dt.elementType, True):
         return F.transform(col, lambda x: _canon_expr(x, dt.elementType))
-    if isinstance(dt, T.StructType) and _needs_canon(dt):
+    if isinstance(dt, T.StructType) and _needs_canon(dt, True):
         rebuilt = F.struct(
             *[_canon_expr(col[f.name], f.dataType).alias(f.name) for f in dt.fields]
         )
@@ -790,10 +799,10 @@ class SnapshotTable:
         # their full values are then fetched by re-reading the SAME
         # diffed files with a keyed join per side — payload bytes never
         # ride the comparison shuffle. Map-bearing columns hash via
-        # their canonical sorted-entry form (_canon_expr), so map
-        # layout never fakes a change. "Unchanged" is hash equality
-        # over 128 independent bits: a type-aware xxhash64 (SQL-equality
-        # normalized for float specials) plus an xxhash64 over a
+        # their canonical sorted-entry form and floats/doubles as
+        # x + 0.0 (_canon_expr), so neither map layout nor -0.0 vs 0.0
+        # fakes a change. "Unchanged" is hash equality over 128
+        # independent bits: a type-aware xxhash64 plus an xxhash64 over a
         # null-structure-EXPLICIT canonical JSON serialization — the
         # type-aware stream alone skips null inputs at every nesting
         # level (NULL struct == struct of NULLs, [1,NULL,2] == [1,2]),
@@ -801,13 +810,8 @@ class SnapshotTable:
         # changed row ~2^-64-and-then-some — the same checksum-equality
         # contract the extraction tick's change detection (sha256) has
         # always used.
-        canon_cols = [c for c in nonkeys if _needs_canon(by_name[c])]
-
         def hash_inputs():
-            return [
-                _canon_expr(F.col(c), by_name[c]) if c in canon_cols else F.col(c)
-                for c in nonkeys
-            ]
+            return [_canon_expr(F.col(c), by_name[c]) for c in nonkeys]
 
         def prep_slim(df: DataFrame, side: str) -> DataFrame:
             sel = [F.col(k) for k in keys] + [F.lit(True).alias(f"_{side}_present")]
@@ -846,13 +850,11 @@ class SnapshotTable:
             .when(unchanged, F.lit(None).cast("string"))
             .otherwise(F.lit("update"))
         )
-        keyed = (
-            j.select(*keys, kind.alias("_kind"))
-            .filter(F.col("_kind").isNotNull())
-            # delta-sized by construction; materialized so the two
-            # payload-attach joins below don't re-run the slim join (and
-            # so AQE sees its true—small—size)
-            .localCheckpoint()
+        # delta-sized by construction; materialized so the two
+        # payload-attach joins below don't re-run the slim join (and so
+        # AQE sees its true—small—size)
+        keyed = materialize(
+            j.select(*keys, kind.alias("_kind")).filter(F.col("_kind").isNotNull())
         )
         if not nonkeys:
             return keyed.select(
