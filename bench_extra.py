@@ -8,9 +8,10 @@ Usage:
   python bench_extra.py plan  q_near_dup_fast ... [--sf DIR] [--out plans/r06 --suffix _before]
   python bench_extra.py list
 
-Queries resolve from __spark_entry__.queries() plus bench.py's
-bench-local callables (the exact workloads the frozen bench times).
-Prints one JSON line per query: {"q": name, "secs": [..], "min": s}.
+all_queries() is the one name -> callable(spark, sf_dir) registry:
+__spark_entry__.queries(), bench.py's bench-local callables (the exact
+workloads the frozen bench times) and two plans only tools/plan_audit.py
+audits. Prints one JSON line per query: {"q": name, "secs": [..], "min": s}.
 """
 
 from __future__ import annotations
@@ -22,6 +23,30 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def _q_semantic_pairs(spark, sf_dir):
+    """SemDeDup's candidate stage. semantic_dedup's tail is a materialized
+    CC (its plan would audit as a bare LogicalRDD scan), so the audit
+    covers the part with a corpus-scale plan."""
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.functions import embeddings as e
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    both = emb.unionByName(emb.withColumn("vec_id", F.col("vec_id") + 1_000_000))
+    cents = e.sampled_centroids(both, 64)
+    return e.semantic_pairs(e.cell_assignments(both, cents), 0.99)
+
+
+def _q_bpe_encode(spark, sf_dir):
+    """The corpus-scale BPE encode map; training runs its own histogram
+    jobs, outside the plan under audit."""
+    from fscrawler_spark.functions.bpe import bpe_encode, train_bpe
+
+    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    merges = train_bpe(d, text_col="text", num_merges=16)
+    return bpe_encode(d, merges, text_col="text")
 
 
 def all_queries():
@@ -45,6 +70,8 @@ def all_queries():
     qs["q_fuzzy_decon"] = bench_mod._q_fuzzy_decon
     qs["q_semantic_decon"] = bench_mod._q_semantic_decon
     qs["q_ppl_word"] = bench_mod._q_ppl_word
+    qs["q_semantic_pairs"] = _q_semantic_pairs
+    qs["q_bpe_encode"] = _q_bpe_encode
     return qs
 
 

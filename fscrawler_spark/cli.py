@@ -2199,15 +2199,6 @@ VERBS = (
     ),
 )
 
-# flags no verb owns: --input (each verb's `input` says whether it reads
-# it), where the verb writes, how Spark runs, the table keys, and the
-# extraction settings (validated for every verb)
-SHARED = (
-    "--input", "--output", "--master", "--rest-port", "--table-keys",
-    "--indexed-chars", "--ignore-above", "--includes", "--excludes", "--filters",
-    "--num-buckets", "--skew-salt", "--lang-detect", "--store-source",
-)
-
 
 def _either(names) -> str:
     names = list(names)

@@ -202,6 +202,3 @@ class ExtractSettings:
 
             return math.ceil(source_len * self.indexed_chars_percent)
         return self.indexed_chars
-
-
-DEFAULTS = ExtractSettings()

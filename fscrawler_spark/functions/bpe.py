@@ -255,19 +255,3 @@ def bpe_encode(
         return pd.Series([enc(t) for t in texts])
 
     return df.withColumn(out_col, _enc(F.col(text_col)))
-
-
-def bpe_token_count(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "n_bpe_tokens",
-    lowercase: bool = False,
-) -> DataFrame:
-    """Exact learned-vocab token counts (the budget-accounting upgrade
-    over text_analysis.bpe_ish_token_count's regex proxy)."""
-    enc = bpe_encode(df, merges, text_col, out_col="__toks", lowercase=lowercase)
-    return enc.withColumn(
-        out_col,
-        F.when(F.col("__toks").isNull(), F.lit(0)).otherwise(F.size("__toks")),
-    ).drop("__toks")

@@ -715,7 +715,7 @@ def dedupe_doc_lines(text_col, sep: str = "\n") -> F.Column:
 
     Pure HOF column expression (split/transform/aggregate): zero
     shuffle, zero Python — it rides the extraction scan like
-    c4_clean_lines. The first-occurrence pass is ONE left fold carrying
+    c4_quality_flags. The first-occurrence pass is ONE left fold carrying
     (seen trimmed keys, kept original lines): each line is trimmed
     exactly once (in a transform projection feeding the fold) and
     checked against the seen-set — O(L · distinct) compares per doc.
@@ -989,30 +989,6 @@ def _c4_kept_lines(
     # the filter keeps the rules and the output in agreement. ws_trim is
     # single-arg, so transform() passes only the element.
     return lines, F.filter(F.transform(lines, ws_trim), _keep)
-
-
-def c4_clean_lines(
-    text_col,
-    min_words_per_line: int = 5,
-    terminal_punct: tuple[str, ...] = C4_TERMINAL_PUNCT,
-    drop_javascript_lines: bool = True,
-    drop_policy_lines: bool = True,
-) -> F.Column:
-    """C4 line-level cleaning: keep only trimmed lines that end in a
-    terminal punctuation mark, have >= ``min_words_per_line`` words, and
-    contain neither 'javascript' nor a policy-boilerplate phrase
-    (case-insensitive substrings, like the reference recipe).
-
-    Pure JVM column expression (split/filter/transform HOFs) — no
-    shuffle, no Python; at 100 TB it rides the extraction scan. NULL
-    text stays NULL.
-    """
-    col = text_col if hasattr(text_col, "cast") else F.col(text_col)
-    _, kept = _c4_kept_lines(
-        col, min_words_per_line, terminal_punct,
-        drop_javascript_lines, drop_policy_lines,
-    )
-    return F.array_join(kept, "\n")
 
 
 def c4_quality_flags(

@@ -847,49 +847,3 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits:
             )
 
     return norm.mapInArrow(_simhash_batches, out_schema)
-
-
-def select_keepers(
-    clusters: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str | None = None,
-    prefer: str = "max",
-) -> DataFrame:
-    """Re-pick each duplicate cluster's keeper by QUALITY instead of the
-    pipelines' min-id default: keeper = the member with the best
-    ``score_col`` in ``docs`` (prefer='max', e.g. a quality score, or
-    'min', e.g. a perplexity). Ties — and the score_col=None case —
-    fall back to min id, so the choice is deterministic at any
-    parallelism. NULL scores always lose to non-NULL (an unscorable doc
-    should never shadow a scored one). Returns (id, cluster_id,
-    is_keeper) with exactly one keeper per cluster.
-
-    Shape: one equi-join on id to fetch scores (AQE broadcasts the
-    cluster side — dup clusters are a small fraction of the corpus) and
-    one window keyed on cluster_id; near-dup clusters are tiny (single
-    digits), so the window's per-key state is bounded and skew-free.
-    Training pipelines (e.g. RefinedWeb, Penedo et al. 2023 §3.3) keep
-    the best-quality member when collapsing near-dup clusters; the
-    reference has no analog (training-data tier, graded first-class).
-    """
-    if prefer not in ("max", "min"):
-        raise ValueError(f"prefer must be 'max' or 'min', got {prefer!r}")
-    base = clusters.select("id", "cluster_id")
-    if score_col is None:
-        return base.withColumn("is_keeper", F.col("id") == F.col("cluster_id"))
-    scored = base.join(
-        docs.select(F.col(id_col).alias("id"), F.col(score_col).alias("_score")),
-        "id",
-        "left",
-    )
-    order = (
-        F.col("_score").desc_nulls_last()
-        if prefer == "max"
-        else F.col("_score").asc_nulls_last()
-    )
-    w = Window.partitionBy("cluster_id").orderBy(order, F.col("id").asc())
-    return (
-        scored.withColumn("is_keeper", F.row_number().over(w) == 1)
-        .drop("_score")
-    )

@@ -46,8 +46,7 @@ from pyspark.sql import types as T
 logger = logging.getLogger(__name__)
 
 # ONE shared default across every operator in this module (lsh_topk,
-# cosine_near_dup_pairs, bucket_size_stats) so an audit of bucket sizes
-# describes the same bucketing the joins actually use.
+# cosine_near_dup_pairs) so they all bucket the same way.
 #
 # SIZE THE BITS TO THE CORPUS: expected bucket size is n / 2^bits per
 # table, and _cap_buckets drops WHOLE buckets above max_bucket — with too
@@ -59,8 +58,7 @@ logger = logging.getLogger(__name__)
 # not an error: skewed corpora can still return valid tail-bucket
 # results) — a SILENT empty result at exactly the scale the operator
 # exists for is never ok.
-# Recall follows 1-(1-p^bits)^tables, so add tables as you add bits;
-# audit with bucket_size_stats() before a big run.
+# Recall follows 1-(1-p^bits)^tables, so add tables as you add bits.
 DEFAULT_BITS = 8
 DEFAULT_TABLES = 4
 DEFAULT_SEED = 42
@@ -125,7 +123,7 @@ def _cached_count(corpus: DataFrame) -> int:
     """Session-scoped LRU over (applicationId, plan semanticHash): the
     bits-sizing count is a full corpus scan at 100 TB, and one session
     typically calls several ANN operators over the SAME corpus plan
-    (lsh_topk + cosine_near_dup_pairs + bucket_size_stats) — they should
+    (lsh_topk + cosine_near_dup_pairs) — they should
     pay ONE count job, not one each. Same trusted-caller caveat as
     ``corpus_count``: if the underlying files change mid-session (an
     incremental tick) the cached cardinality is stale — pass
@@ -174,9 +172,7 @@ def _resolve_bits(
     pay it once), and a crossover WARNS rather than
     raising — a skewed corpus concentrates mass in a few dense buckets
     the cap drops while its tail still returns valid neighbors, so a
-    hard error would refuse working configurations. Audit real bucket
-    sizes with ``bucket_size_stats`` before trusting explicit bits at
-    scale."""
+    hard error would refuse working configurations."""
     if bits is not None:
         _validate_bits(bits)
     if max_bucket is None:
@@ -202,7 +198,7 @@ def _resolve_bits(
             "%s: bits=%d gives an EXPECTED bucket of %.0f > max_bucket=%d "
             "for n=%d; under a near-uniform distribution most buckets "
             "exceed the cap and are dropped (empty or severely truncated "
-            "result). %s; audit with bucket_size_stats.",
+            "result). %s.",
             op, bits, n / (1 << bits), max_bucket, n, remedy,
         )
     return bits
@@ -344,53 +340,11 @@ def _cap_buckets(bucketed: DataFrame, max_bucket: int | None) -> DataFrame:
     giant-bucket guard. A window count over the SAME (table, bucket) key
     the candidate join shuffles on shares that exchange, so the guard is
     effectively free (see the A/B note in dedup.lsh_candidate_pairs).
-    Dropped mass is auditable via bucket_size_stats() (can't be logged
-    inline without forcing an action on a lazy plan)."""
+    Dropped mass is not logged inline (that would force an action on a
+    lazy plan)."""
     from fscrawler_spark.functions.dedup import cap_groups
 
     return cap_groups(bucketed, ["table", "bucket"], max_bucket)
-
-
-def bucket_size_stats(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int | None = None,
-    tables: int = DEFAULT_TABLES,
-    seed: int = DEFAULT_SEED,
-    dim: int | None = None,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    corpus_count: int | None = None,
-) -> DataFrame:
-    """(table, bucket, n) distribution — audit which buckets a cap would
-    drop before running the join. bits=None auto-sizes like the join
-    operators do, so the default audit describes the bucketing the guard
-    filters; EXPLICIT bits are audited as-given WITHOUT the crossover
-    check (and without any count job) — this is the diagnostic for
-    exactly the configuration the join operators warn about, so it must
-    never raise (or nag) where they do."""
-    if bits is None:
-        if max_bucket is None:
-            # no cap to audit against: floor bits, and no count job —
-            # the cardinality would be ignored anyway
-            bits = DEFAULT_BITS
-        else:
-            n = corpus_count if corpus_count is not None else df.count()
-            try:
-                bits = auto_bits(n, max_bucket)
-            except ValueError:
-                # past the MAX_BITS feasibility ceiling: audit the closest
-                # achievable bucketing instead of refusing to diagnose
-                bits = MAX_BITS
-    else:
-        _validate_bits(bits)
-    dim = _infer_dim(df, vec_col, dim)
-    planes = random_hyperplanes(dim, bits, tables, seed)
-    return (
-        _bucketed(df, id_col, vec_col, planes, "id", "v")
-        .groupBy("table", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def make_ivf_assign_udf(centroids: list[tuple[int, list[float]]], nprobe: int = 1):

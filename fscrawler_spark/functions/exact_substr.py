@@ -129,8 +129,9 @@ def duplicate_span_flags(
     # explode+hash scan are gone (row-identical; measured 3.3s -> 2.2s
     # for the flagged-position stage at 50k docs, 65M grams). Per-h
     # groups are position counts of one gram — bounded by its corpus
-    # frequency; the window sorts within the h-partition, which AQE
-    # splits on skew like any other sort.
+    # frequency, and NOT split on skew: AQE splits skewed partitions of
+    # joins and rebalances only, never a window partition, so every
+    # position of a hot gram lands in one task (ROADMAP item 4).
     w = Window.partitionBy("h")
     dup_pred = (
         (F.min(id_col).over(w) != F.max(id_col).over(w))

@@ -53,9 +53,6 @@ IMAGE_MAGICS: tuple[tuple[str, str], ...] = (
     ("MM\x00*", MIME_TIFF),
 )
 
-_WS_RE = re.compile(r"\s+")
-
-
 SNIFF_WINDOW = 64  # magic-byte window, like real content sniffers
 
 
@@ -105,8 +102,8 @@ def extract_image(text: str, mime: str) -> ExtractResult:
     they need an OCR pass this engine does not run at 10^12-turn scale
     (the reference gates the Tesseract branch the same way,
     TikaInstance.java:151-207). error='needs_ocr' makes them countable in
-    metrics and routable to a registry OCR handler (registry.py), unlike
-    the old behavior that collapsed them into 'parse_error'."""
+    metrics, unlike the old behavior that collapsed them into
+    'parse_error'."""
     return ExtractResult(mime, None, [], "needs_ocr")
 
 
@@ -150,7 +147,6 @@ _TOKEN_RE = re.compile(
     r"|</[^>]*>?",
     re.DOTALL,
 )
-_TAGNAME_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9-]*)")
 
 # Elements whose entire subtree is boilerplate-by-construction.
 DROP_TAGS = frozenset(

@@ -1,27 +1,14 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via mapInPandas.
 
-Decode is conditionally REAL for images: ``extract_media_features`` and
-``resize_images`` run a true PIL decode (feature stats / LANCZOS resize)
-whenever PIL imports on the executors, with per-row failures captured in
-``decode_error``; without PIL they raise NotImplementedError unless
-``fake=True``, in which case a deterministic fake decoder derives
-pixel-stat stand-ins from the payload bytes — the Spark-side plumbing
-(schema, Arrow batch shape, partitioning, UDF signatures) is identical
-on both paths. Video frame sampling remains fake-only (no ffmpeg).
-
-``probe_media_headers`` is the ALWAYS-real tier: container-format
-header parsing (PNG IHDR, JPEG SOF marker walk, GIF logical screen,
-BMP info header, WEBP VP8/VP8L/VP8X) is pure byte arithmetic — no
-image library — so width/height/channels/bit-depth metadata extraction
-runs for real in any environment, exactly the fields Tika's image
-parser family surfaces as metadata (tika/.../TikaInstance.java:136-186
-wires ImageParser/JpegParser, whose output is dimensions + EXIF-ish
-metadata, not pixels). Pixel statistics stay PIL-gated above.
-
-Analog in the reference: Tika's image parsers are wired into the parser
-composition but OCR auto-disables when the tesseract binary is missing
-(TikaInstance.java:151-207) — same gate-on-capability pattern.
+``probe_media_headers`` parses container headers only (PNG IHDR, JPEG
+SOF marker walk, GIF logical screen, BMP info header, WEBP
+VP8/VP8L/VP8X): pure byte arithmetic, no image library, so
+width/height/channels/bit-depth metadata extraction runs for real in
+any environment — exactly the fields Tika's image parser family
+surfaces as metadata (tika/.../TikaInstance.java:136-186 wires
+ImageParser/JpegParser, whose output is dimensions + EXIF-ish metadata,
+not pixels). No pixel is decoded.
 """
 
 from __future__ import annotations
@@ -31,48 +18,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("byte_len", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake 'decoder': byte-histogram-ish feature vector.
-    Stands in for PIL decode / librosa features / frame sampling."""
-    if not payload:
-        return [0.0] * dim
-    buckets = [0] * dim
-    for i, b in enumerate(payload[:4096]):
-        buckets[b % dim] += 1
-    total = sum(buckets) or 1
-    return [round(x / total, 6) for x in buckets]
-
 
 # --- container-format header probe (stdlib-only, always real) -----------
 #
@@ -380,197 +325,6 @@ def probe_media_headers(
     return src.mapInPandas(gen, PROBE_SCHEMA)
 
 
-def _pil_features(Image, payload: bytes) -> list[float]:
-    """Real image features from a decoded payload: [width, height, bands,
-    mean_r, mean_g, mean_b, std_r, std_g, std_b]. Stats are computed on a
-    bounded (64x64 thumbnail) RGB view so the per-item cost is constant
-    regardless of source resolution; width/height report the ORIGINAL
-    size. Raises on undecodable bytes — callers turn that into a per-row
-    decode_error."""
-    import io
-
-    import numpy as np
-
-    img = Image.open(io.BytesIO(payload))
-    width, height = img.size
-    bands = len(img.getbands())
-    rgb = img.convert("RGB")
-    rgb.thumbnail((64, 64))
-    arr = np.asarray(rgb, dtype=np.float64) / 255.0
-    means = arr.mean(axis=(0, 1))
-    stds = arr.std(axis=(0, 1))
-    return (
-        [float(width), float(height), float(bands)]
-        + [round(float(x), 6) for x in means]
-        + [round(float(x), 6) for x in stds]
-    )
-
-
-def extract_media_features(df: DataFrame, fake: bool = True, feature_dim: int = 8) -> DataFrame:
-    """mapInPandas over binary payloads -> per-item feature rows.
-
-    Batched with Arrow; each pandas batch is independent (stateless), so
-    partitioning is free-form and the op scales embarrassingly parallel.
-
-    fake=True (default): the deterministic byte-histogram decoder — the
-    oracle-stable fixture path (q_media_features pins it). fake=False:
-    REAL decode via PIL when importable on the executors — 9-dim
-    [width, height, bands, RGB means, RGB stds] per image (see
-    _pil_features; per-row decode failures, including audio/video
-    payloads PIL cannot open, land in decode_error and never fail the
-    job), else NotImplementedError. Same conditional-capability gate as
-    resize_images — the reference auto-disables OCR the same way when
-    tesseract is missing (tika/.../TikaInstance.java:151-207)."""
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        if not fake:
-            try:
-                from PIL import Image
-            except ImportError as e:
-                raise NotImplementedError(
-                    "real media feature decode requires PIL on the executors; "
-                    "run with fake=True"
-                ) from e
-        for pdf in batches:
-            feats, errs = [], []
-            for payload in pdf["payload"]:
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    feats.append(
-                        _fake_decode(b, feature_dim) if fake else _pil_features(Image, b)
-                    )
-                    errs.append(None)
-                except Exception as e:  # never fail the job on one item
-                    feats.append(None)
-                    errs.append(f"decode_error: {type(e).__name__}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "byte_len": [len(bytes(p)) if p is not None else 0 for p in pdf["payload"]],
-                    "feature": feats,
-                    "decode_error": errs,
-                }
-            )
-
-    return df.mapInPandas(gen, FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-        T.StructField("ts_ms", T.IntegerType()),
-    ]
-)
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224, fake: bool = True) -> DataFrame:
-    """Image resize over binary payloads (mapInPandas).
-
-    fake=True (default): deterministic byte block of the target size so
-    schema/batching/partitioning are exercised end-to-end without any
-    image library. fake=False: REAL decode via PIL when importable on
-    the executors (decode → LANCZOS resize → PNG re-encode; per-row
-    decode failures land in decode_error, never fail the job), else
-    NotImplementedError — the env-gate is honest: the real path runs
-    wherever PIL exists (skip-marked test in tests/test_round4_misc.py),
-    and this container intentionally lacks it."""
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        if not fake:
-            try:
-                from PIL import Image
-            except ImportError as e:
-                raise NotImplementedError(
-                    "real resize requires PIL on the executors; run with fake=True"
-                ) from e
-        for pdf in batches:
-            payloads, errs = [], []
-            for p in pdf["payload"]:
-                b = bytes(p) if p is not None else b""
-                if fake:
-                    seed = (sum(b[:64]) if b else 0) % 256
-                    payloads.append(bytes([seed]) * min(width * height // 64, 4096))
-                    errs.append(None)
-                    continue
-                try:
-                    import io
-
-                    img = Image.open(io.BytesIO(b))
-                    out = io.BytesIO()
-                    img.resize((width, height), Image.LANCZOS).save(out, format="PNG")
-                    payloads.append(out.getvalue())
-                    errs.append(None)
-                except Exception as e:  # one bad image never fails the batch
-                    payloads.append(None)
-                    errs.append(f"decode_error: {type(e).__name__}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "width": width,
-                    "height": height,
-                    "decode_error": errs,
-                }
-            )
-
-    return df.mapInPandas(gen, RESIZE_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 8, fake: bool = True) -> DataFrame:
-    """Video frame sampling: one input row -> N frame rows (mapInPandas is
-    a flat map, so the 1->N fan-out is native). STUB decode: deterministic
-    byte slices stand in for decoded frames."""
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame": [], "ts_ms": []}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if not fake:
-                    raise NotImplementedError("real frame decode requires ffmpeg; run with fake=True")
-                b = bytes(p) if p is not None else b""
-                n = min(max_frames, max(1, len(b) // 256))
-                for i in range(n):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(b[i * 256 : (i + 1) * 256])
-                    out["ts_ms"].append(i * every_ms)
-            yield pd.DataFrame(out)
-
-    return df.filter(F.col("kind") == "video").mapInPandas(gen, FRAME_SCHEMA)
-
-
-def _kind_index(df: DataFrame) -> F.Column:
-    """1-based round-robin index over the 3 kinds, dispatched on the id
-    TYPE: numeric ids keep the oracle-pinned `doc_id % 3` (DuckDB twin:
-    CASE doc_id % 3), while string ids (the real docs table's sha256
-    doc_id) hash first — a bare `% 3` on a hex string throws
-    CAST_INVALID_INPUT under Spark 4 ANSI."""
-    from pyspark.sql import types as T
-
-    if isinstance(df.schema["doc_id"].dataType, T.NumericType):
-        return (F.col("doc_id") % 3 + 1).cast("int")
-    return (F.pmod(F.xxhash64(F.col("doc_id")), F.lit(3)) + 1).cast("int")
-
-
 def _synth_png(width: int, height: int) -> bytes:
     """Author a complete, spec-valid RGB8 PNG (zlib stream + CRCs) —
     stdlib-only, deterministic. Used by the media fixture so the probe
@@ -634,24 +388,4 @@ def media_probe_fixture(df: DataFrame) -> DataFrame:
 
     return df.select("doc_id").mapInPandas(
         gen, "media_id string, kind string, payload binary"
-    )
-
-
-def media_table_from_documents(df: DataFrame) -> DataFrame:
-    """Derive a deterministic media fixture from a text table: payload =
-    UTF-8 bytes, kind round-robins by id. Used by tests and the smoke
-    queries — real deployments read true binary columns instead."""
-    return df.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            _kind_index(df),
-        ).alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("duration_ms"),
-        ).alias("meta"),
     )

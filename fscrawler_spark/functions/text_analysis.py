@@ -37,17 +37,6 @@ def token_count(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish proxy: word pieces + punctuation as separate tokens
-    (regex split on word/punct boundaries), the cheap token estimator
-    for budget accounting at 100 TB (no vocab lookup)."""
-    t = F.trim(text)
-    pieces = F.split(t, r"\s+|(?<=[\p{Punct}])|(?=[\p{Punct}])")
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.filter(pieces, lambda p: F.length(p) > 0))
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of non-space chars that are ASCII punctuation."""
     nospace = F.regexp_replace(text, r"\s+", "")
@@ -93,29 +82,6 @@ def fingerprint(text: Column) -> Column:
 def normalized_text(text: Column) -> Column:
     """Canonical form for exact dedup: lowercase, collapse whitespace."""
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-
-
-def langid_heuristic(text: Column) -> Column:
-    """SQL-expressible language guess: the profile with the most stopword
-    hits wins (ties -> 'und'). JVM-side; see langid_udf for the stronger
-    n-gram scorer."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    scores = []
-    for lang, prof in sorted(LANG_PROFILES.items()):
-        sw = F.array(*[F.lit(w) for w in sorted(prof)])
-        scores.append(
-            F.struct(
-                F.size(F.filter(words, lambda w: F.array_contains(sw, w))).alias("hits"),
-                F.lit(lang).alias("lang"),
-            )
-        )
-    arr = F.array(*scores)
-    best = F.array_max(arr)
-    # a TIE between profiles is genuinely undetermined: array_max would
-    # otherwise break it on the lang string (lexicographically greatest
-    # wins) — 'de la' scoring es=2, fr=2 must be 'und', not 'fr'
-    tie = F.size(F.filter(arr, lambda s: s["hits"] == best["hits"])) > 1
-    return F.when((best["hits"] > 0) & ~tie, best["lang"]).otherwise(F.lit("und"))
 
 
 def langid_udf():

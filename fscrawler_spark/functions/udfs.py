@@ -51,10 +51,9 @@ EXTRACT_TYPE = T.StructType(
 
 
 def build_extract_batch(pairs, settings: ExtractSettings) -> pa.Array:
-    """Shared Arrow result assembly for every extraction-shaped UDF
-    (dispatch, registry, decrypt) — ONE implementation so settings
+    """Arrow result assembly for the extraction UDF: the settings
     semantics (indexed_chars / indexed_chars_percent / raw_metadata) and
-    the packed-span encoding cannot drift between them.
+    the packed-span encoding.
 
     ``pairs`` yields (source_text_for_metadata, ExtractResult).
     """

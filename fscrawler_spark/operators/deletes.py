@@ -228,11 +228,3 @@ def stage_and_swap_buckets(
         if fs.exists(staged) and not fs.rename(staged, live):
             raise IOError(f"bucket swap: failed to swap in {staged}")
     fs.delete(HPath(staging), True)
-
-
-def prune_ignored(turns: DataFrame, ignored_convs: DataFrame) -> DataFrame:
-    """F4 — .fscrawlerignore analog: drop every turn of marked
-    conversations via a broadcast anti-join (marker table is tiny)."""
-    return turns.join(
-        F.broadcast(ignored_convs.select("conv_id")), "conv_id", "left_anti"
-    )

@@ -145,41 +145,6 @@ def deleted_keys(prev: DataFrame, current: DataFrame) -> DataFrame:
     )
 
 
-def merge_tags(docs: DataFrame, conv_tags: DataFrame) -> DataFrame:
-    """J3 — per-conversation metadata merge, flat-map variant
-    (DocUtils.java:54-148; for nested payloads use ``merge_tags_deep``).
-
-    conv_tags: (conv_id, tags:map<string,string>). Broadcast hash join —
-    tag tables are tiny relative to the turns table. Precedence follows
-    the reference: DocUtils.merge(mainNode=tags, updateNode=doc) keeps
-    the TAGS value on a key conflict — the tags file is the operator's
-    override channel ("you can overwrite metadata", docs/crawler
-    tags docs) — and copies doc-only keys in.
-    """
-    conv_side = conv_tags.select("conv_id", F.col("tags").alias("_conv_tags"))
-    tagged = docs.join(F.broadcast(conv_side), "conv_id", "left")
-    if "tags" in docs.columns:
-        doc_m = F.coalesce(F.col("tags"), F.expr("map()"))
-        conv_m = F.coalesce(F.col("_conv_tags"), F.expr("map()"))
-        merged = F.map_from_arrays(
-            F.array_union(F.map_keys(conv_m), F.map_keys(doc_m)),
-            F.transform(
-                F.array_union(F.map_keys(conv_m), F.map_keys(doc_m)),
-                # tags (conv side) win conflicts, per the reference —
-                # KEY-presence-aware, not coalesce: a tags entry whose
-                # value is NULL is still an override (coalesce would let
-                # the doc value win for exactly that deliberate null)
-                lambda k: F.when(
-                    F.map_contains_key(conv_m, k), F.element_at(conv_m, k)
-                ).otherwise(F.element_at(doc_m, k)),
-            ),
-        )
-        return tagged.withColumn("tags", merged).drop("_conv_tags")
-    return tagged.withColumnRenamed("_conv_tags", "tags").withColumn(
-        "tags", F.coalesce(F.col("tags"), F.expr("map()"))
-    )
-
-
 def deep_merge_json(tags: object, doc: object):
     """The exact DocUtils.merge(mainNode=tags, updateNode=doc) semantics
     (beans/.../DocUtils.java:125-148) over parsed JSON values:

@@ -9,10 +9,10 @@ request build 1180-1232, response parse incl. terms buckets 1250-1310;
 semantic/vector variant 800-900,1313-1368).
 
 Here the same algebra lowers to Catalyst column predicates — filters
-push down to the scan, terms aggregations become hash aggregates,
-highlighting is a single JVM-side regexp_replace, the semantic query
-routes to the embeddings ANN operators, and "search" over the
-extracted-docs table is plain DataFrame execution.
+push down to the scan, highlighting is a single JVM-side
+regexp_replace, the semantic query routes to the embeddings ANN
+operators, and "search" over the extracted-docs table is plain
+DataFrame execution.
 """
 
 from __future__ import annotations
@@ -159,13 +159,12 @@ class Semantic:
 
 @dataclass(frozen=True)
 class SearchRequest:
-    """ESSearchRequest analog: query + size/sort/fields/highlight/aggs."""
+    """ESSearchRequest analog: query + size/sort/fields/highlight."""
 
     query: object = None
     size: int = 10  # ES default (ElasticsearchClient.java:1194)
     sort: tuple[tuple[str, str], ...] = ()  # (field, 'asc'|'desc')
     fields: tuple[str, ...] = ()
-    aggregations: tuple[str, ...] = ()  # terms aggs by field
     # highlighter fields (ESSearchRequest.java:27-95 withHighlighter):
     # each emits a '<field>_highlight' column with query terms wrapped in
     # <em>..</em> (ES number_of_fragments=0 whole-field mode)
@@ -287,25 +286,3 @@ def execute_search(df: DataFrame, req: SearchRequest) -> DataFrame:
     elif hl_cols:
         out = out.select("*", *hl_cols)
     return out.limit(req.size)
-
-
-def execute_terms_aggs(df: DataFrame, req: SearchRequest) -> dict[str, DataFrame]:
-    """Terms aggregations (ES bucket aggs -> hash aggregates), computed on
-    the filtered set like ES does (A3, ESTermsAggregation). A Semantic
-    query aggregates over its k nearest hits (the ES knn+aggs shape),
-    not the whole corpus."""
-    if isinstance(req.query, Semantic):
-        from fscrawler_spark.session import materialize
-
-        # materialize the k hits ONCE: each returned DataFrame's lazy
-        # plan would otherwise embed its own ANN scan of the corpus
-        # (N agg fields = N brute-force/LSH jobs); the hit set is tiny
-        base = materialize(_semantic_hits(df, req.query))
-    elif req.query is not None:
-        base = df.filter(req.query.to_column())
-    else:
-        base = df
-    return {
-        fld: base.groupBy(F.col(fld).alias("key")).agg(F.count(F.lit(1)).alias("doc_count"))
-        for fld in req.aggregations
-    }

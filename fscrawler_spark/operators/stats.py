@@ -1,8 +1,8 @@
 """Summary/statistics operators (SURVEY §2.1 S9, §2.5 A1-A4).
 
 Per-partition lineage/metrics live in plans/pipeline.bucket_metrics; here
-are the remaining aggregates: the folder-document analog (one summary row
-per conversation) and run statistics.
+is the remaining aggregate: the folder-document analog (one summary row
+per conversation).
 """
 
 from __future__ import annotations
@@ -18,8 +18,7 @@ def parse_failure_flag(error_col: Column | str = "error") -> Column:
     pass (T5), not a broken document — it has its own counter
     (bucket_metrics.needs_ocr) so the two counters partition the error
     space instead of double-counting. 'encrypted' STAYS a failure:
-    content is genuinely unavailable until a password retry succeeds
-    (which clears the error and the flag with it)."""
+    content is genuinely unavailable."""
     c = F.col(error_col) if isinstance(error_col, str) else error_col
     return F.when(c.isNotNull() & (c != F.lit("needs_ocr")), 1).otherwise(0)
 
@@ -44,14 +43,4 @@ def conversation_summary(docs: DataFrame) -> DataFrame:
         F.sum(F.coalesce(F.octet_length("extracted"), F.lit(0))).cast("long").alias("bytes_out"),
         F.sum(parse_failure_flag()).cast("long").alias("parse_failures"),
         F.count_distinct("mime").cast("long").alias("mime_kinds"),
-    )
-
-
-def run_statistics(docs: DataFrame) -> DataFrame:
-    """A1 ScanStatistic analog: single-row run totals."""
-    return docs.agg(
-        F.count(F.lit(1)).cast("long").alias("nb_doc_scan"),
-        F.sum(parse_failure_flag()).cast("long").alias("nb_parse_failures"),
-        F.count_distinct("conv_id").alias("nb_conversations"),
-        F.sum(F.size("spans")).cast("long").alias("nb_spans"),
     )

@@ -83,26 +83,6 @@ def write_bucketed(
     )
 
 
-def colocated_changed_keys(
-    spark: SparkSession, current_table: str, prev_table: str
-) -> DataFrame:
-    """J1 over two equally-bucketed tables: new-or-changed keys, joined
-    bucket-to-bucket with NO Exchange on either side. The checksum
-    comparison rides along as a post-join filter so the join keys match
-    the bucket keys exactly."""
-    cur = spark.table(current_table).select(
-        "conv_id", "turn_idx", F.sha2("text", 256).alias("_ck")
-    )
-    prev = spark.table(prev_table).select(
-        "conv_id", "turn_idx", F.sha2("text", 256).alias("_ck_prev")
-    )
-    return (
-        cur.join(prev, ["conv_id", "turn_idx"], "left")
-        .filter(F.col("_ck_prev").isNull() | (F.col("_ck_prev") != F.col("_ck")))
-        .select("conv_id", "turn_idx")
-    )
-
-
 # ---------------------------------------------------------------------------
 # snapshot index: the tick's co-located diff side
 # ---------------------------------------------------------------------------

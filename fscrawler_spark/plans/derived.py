@@ -66,18 +66,11 @@ import os
 
 from fscrawler_spark.plans.snapshot_table import (
     CHANGE_COLS,
-    DERIVED_CURSOR_KEYS,
     FileEntry,
     SchemaRewriteError,
     SnapshotTable,
 )
 from fscrawler_spark.session import materialize
-
-# summary keys the sync stamps on every derived commit (cursor +
-# provenance); live in the manifest top level like publish's run_id.
-# Defined in snapshot_table so row-preserving maintenance commits
-# (compact, rollback) carry them forward without a circular import.
-CURSOR_KEYS = DERIVED_CURSOR_KEYS
 
 
 def _cursor_extra(upstream: SnapshotTable, snapshot_id: int) -> dict:

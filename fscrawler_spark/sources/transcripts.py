@@ -3,8 +3,7 @@
 The reference's five crawler plugins (local/FTP/SSH/S3/HTTP) all produce
 the same record contract; in Spark the "plugin" is just the reader format
 and path scheme — s3a:// paths hit S3 natively, etc. What we own is the
-schema contract + validation + the driver-side single-document ingest
-(the REST /_document analog, rest/.../DocumentApi.java:89-122).
+schema contract + validation.
 """
 
 from __future__ import annotations
@@ -96,59 +95,4 @@ def read_transcripts(spark: SparkSession, path: str, fmt: str = "parquet") -> Da
         df = reader.schema(TRANSCRIPT_SCHEMA).option("header", "true").csv(path)
     else:
         df = reader.parquet(path)
-    return validate_schema(df)
-
-
-def ingest_documents(
-    spark: SparkSession,
-    docs: list[dict],
-    default_conv: str | None = None,
-) -> DataFrame:
-    """REST /_document upload analog: driver-side ingest of ad-hoc
-    documents into the canonical shape (id defaulting mirrors
-    DocumentApi.java:324-334 — the reference generates a UNIQUE id per
-    upload when none is given).
-
-    ``default_conv=None`` (default) assigns each CALL a fresh
-    ``_upload_<uuid>`` conversation, so two separate ingests of
-    id-less documents can never collide on (conv_id, turn_idx) — the
-    key doc_id derives from downstream (a collision would silently
-    merge distinct uploads in dedup/incremental flows). Pass an
-    explicit default_conv to opt into a stable identity instead.
-
-    ``ts`` accepts a datetime, an epoch number (seconds, or millis when
-    > 10^11 — the ES convention), or an ISO-ish string; malformed
-    strings null the field (try_cast) rather than failing the whole
-    ingest under ANSI."""
-    import datetime as _dt
-    import uuid
-
-    if default_conv is None:
-        default_conv = f"_upload_{uuid.uuid4().hex[:12]}"
-    rows = []
-    for i, d in enumerate(docs):
-        ts = d.get("ts", "2026-01-01 00:00:00")
-        if isinstance(ts, bool):
-            raise TypeError(f"ts must be a datetime, epoch number or string, got {ts!r}")
-        if isinstance(ts, (int, float)):
-            # epoch upload (ES-style): > 10^11 can only be milliseconds
-            # (year ~5138 in seconds); anything below reads as seconds
-            ts = _dt.datetime.fromtimestamp(
-                ts / 1000.0 if abs(ts) > 1e11 else ts, tz=_dt.timezone.utc
-            ).replace(tzinfo=None)
-        if isinstance(ts, (_dt.datetime, _dt.date)):
-            ts = ts.isoformat(sep=" ") if isinstance(ts, _dt.datetime) else ts.isoformat()
-        rows.append(
-            (
-                str(d.get("conv_id", default_conv)),
-                int(d.get("turn_idx", i)),
-                d.get("role", "user"),
-                d.get("text"),
-                d.get("tool"),
-                ts if ts is None else str(ts),
-            )
-        )
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts string"
-    ).withColumn("ts", F.expr("try_cast(ts as timestamp)"))
     return validate_schema(df)

@@ -217,101 +217,3 @@ def _compact_locked(spark, streaming_dir, output_dir, settings):
     manifest.mark_completed(list(range(settings.num_buckets)), rows=rows)
     manifest.finish()
     return {"run_id": run_id, "rows": rows, "buckets": len(mrows)}
-
-
-def run_streaming_extraction_to_table(
-    spark: SparkSession,
-    input_dir: str,
-    table_root: str,
-    checkpoint_dir: str,
-    settings: ExtractSettings | None = None,
-    await_termination: bool = True,
-):
-    """AvailableNow drain into a SNAPSHOT TABLE: each micro-batch commits
-    one atomic ``append`` snapshot (plans/snapshot_table.py), the
-    Iceberg-style streaming sink.
-
-    This path erases BOTH documented divergences of the file-sink
-    streaming mode: (1) no ``_spark_metadata``-owned directory — the
-    table is a first-class snapshot table, immediately readable,
-    tickable (``snap:`` input), compactable, and time-travelable with no
-    compact_streaming_output migration; (2) inside foreachBatch the
-    micro-batch is a plain batch DataFrame, so the O1 within-file
-    (conv_id, turn_idx) ordering IS applied — streaming output becomes
-    byte-stable per file like the batch sink's.
-
-    Exactly-once: the streaming checkpoint replays an unacknowledged
-    epoch after a crash, which would double-append — every commit
-    therefore records (stream_id, epoch_id) in its manifest and the
-    handler SKIPS an epoch the table has already committed (Iceberg
-    stores the same guard in snapshot summary properties). stream_id is
-    derived from the checkpoint dir, the identity Spark itself uses for
-    the stream's progress.
-
-    Scale shape: identical to run_streaming_extraction (zero-Exchange
-    extraction plan per batch; sortWithinPartitions is a per-task sort,
-    no Exchange) plus one O(metadata) manifest commit per epoch; commit
-    arbitration is optimistic-retry, so a concurrent batch writer
-    (compaction, tag-merge replace) never corrupts the table.
-    """
-    import hashlib
-
-    from fscrawler_spark.plans.snapshot_table import SnapshotTable
-
-    settings = settings or ExtractSettings()
-    table = SnapshotTable(table_root)
-    stream_id = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
-
-    def _committed_watermark(t: SnapshotTable) -> int:
-        """Highest epoch this stream has committed to the table. Primary
-        source: the CURRENT manifest's ``streams`` map — carried forward
-        through every commit (snapshot_table._commit), so it survives
-        expire_unreferenced() dropping the historical append manifests
-        (otherwise a replayed epoch whose manifest was expired would
-        double-append). Legacy fallback: scan whatever per-snapshot
-        (stream_id, epoch_id) records still exist (pre-``streams``
-        tables). Epochs are strictly increasing per checkpoint, so a
-        single max is a complete dedup record."""
-        if not t.exists():
-            return -1
-        wm = int((t.manifest().get("streams") or {}).get(stream_id, -1))
-        if wm < 0:
-            for sid in t.snapshot_ids():
-                m = t.manifest(sid)
-                if m.get("stream_id") == stream_id and m.get("epoch_id") is not None:
-                    wm = max(wm, int(m["epoch_id"]))
-        return wm
-
-    # read the table-side watermark ONCE per drain (not per batch — the
-    # old per-batch scan re-parsed every historical manifest, O(epochs^2)
-    # across a long drain); only this process commits this stream's
-    # epochs, so the in-memory advance below stays authoritative
-    state = {"wm": None}
-
-    def handle(batch_df, epoch_id: int) -> None:
-        if state["wm"] is None:
-            state["wm"] = _committed_watermark(table)
-        if epoch_id <= state["wm"]:
-            return  # replayed epoch after a crash: already committed
-        docs = batch_df.sortWithinPartitions("conv_id", "turn_idx")
-        table.append(
-            spark, docs, extra={"stream_id": stream_id, "epoch_id": epoch_id}
-        )
-        state["wm"] = max(state["wm"], epoch_id)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
-    docs = extract_transcripts(validate_schema(stream), settings)
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q

@@ -121,38 +121,6 @@ def test_folder_summary_agg(spark, con):
     """)
 
 
-def test_flat_tag_merge(spark, con):
-    from fscrawler_spark.operators.incremental import merge_tags
-
-    d0 = spark.read.parquet(f"{SF}/documents.parquet")
-    d = d0.select(F.col("source").alias("conv_id"), "doc_id")
-    tags = (
-        d0.select("source")
-        .distinct()
-        .select(
-            F.col("source").alias("conv_id"),
-            F.create_map(F.lit("owner"), F.upper(F.col("source"))).alias("tags"),
-        )
-    )
-    sdf = merge_tags(d, tags).select(
-        "doc_id", F.element_at(F.col("tags"), "owner").alias("owner")
-    )
-    _match(sdf, con, "SELECT doc_id, upper(source) AS owner FROM documents")
-
-
-def test_search_terms_agg_demoted(spark, con):
-    """Driver row through mid-round-4; demoted in the assembly-operator
-    registry swap. Same Spark code and DuckDB twin, value-for-value."""
-    from fscrawler_spark.operators.search import SearchRequest, Term, execute_terms_aggs
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    req = SearchRequest(query=Term("lang", "en"), aggregations=("source",))
-    _match(execute_terms_aggs(d, req)["source"], con, """
-        SELECT source AS key, count(*) AS doc_count FROM documents
-        WHERE lang = 'en' GROUP BY source
-    """)
-
-
 def test_simhash_signatures_demoted(spark, con):
     """Driver row through mid-round-4; demoted in the assembly-operator
     registry swap (the signature path stays driver-checked through

@@ -1,5 +1,5 @@
-"""Tests for incremental joins, text analysis, dedup, embeddings,
-multimodal plumbing, and the streaming job."""
+"""Tests for incremental joins, text analysis, dedup, embeddings and
+the streaming job."""
 
 import os
 
@@ -7,10 +7,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from fscrawler_spark.functions import dedup, embeddings, text_analysis
-from fscrawler_spark.functions.multimodal import (
-    extract_media_features,
-    media_table_from_documents,
-)
 from fscrawler_spark.operators import incremental
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -58,23 +54,6 @@ def test_deleted_keys(spark):
     cur = spark.createDataFrame([("c", 0)], "conv_id string, turn_idx int")
     out = incremental.deleted_keys(prev, cur)
     assert sorted((r["conv_id"], r["turn_idx"]) for r in out.collect()) == [("c", 1), ("d", 0)]
-
-
-def test_merge_tags_reference_precedence(spark):
-    """DocUtils.merge(mainNode=tags, updateNode=doc): the TAGS value is
-    kept on a key conflict (the tags file is the override channel);
-    doc-only keys are copied in. (Round-1 had this backwards.)"""
-    docs = spark.createDataFrame(
-        [("c", 0, {"k": "docval", "only_doc": "x"}), ("d", 0, None)],
-        "conv_id string, turn_idx int, tags map<string,string>",
-    )
-    tags = spark.createDataFrame(
-        [("c", {"k": "convval", "only_conv": "y"})],
-        "conv_id string, tags map<string,string>",
-    )
-    out = {r["conv_id"]: r["tags"] for r in incremental.merge_tags(docs, tags).collect()}
-    assert out["c"] == {"k": "convval", "only_doc": "x", "only_conv": "y"}
-    assert out["d"] == {}
 
 
 def test_deep_merge_json_docutils_semantics():
@@ -142,7 +121,7 @@ def test_token_count_and_quality(spark):
     assert 0.0 <= rows[0]["q"] <= 1.0
 
 
-def test_langid_heuristic_and_udf(spark):
+def test_langid_udf(spark):
     df = spark.createDataFrame(
         [
             ("the quick fox is in the barn and it is fine",),
@@ -151,8 +130,6 @@ def test_langid_heuristic_and_udf(spark):
         ],
         "text string",
     )
-    got = [r[0] for r in df.select(text_analysis.langid_heuristic(F.col("text"))).collect()]
-    assert got == ["en", "es", "de"]
     udf_got = [r[0] for r in df.select(text_analysis.langid_udf()(F.col("text"))).collect()]
     assert udf_got == ["en", "es", "de"]
 
@@ -270,41 +247,6 @@ def test_cosine_near_dup_pairs_selfdup(spark):
     pairs = embeddings.cosine_near_dup_pairs(both, threshold=0.999999).collect()
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     assert all((i, i + 100000) in found for i in range(50))
-
-
-# --- multimodal -------------------------------------------------------------------
-
-def test_media_feature_plumbing(spark):
-    docs = docs_df(spark).limit(30)
-    media = media_table_from_documents(docs)
-    feats = extract_media_features(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert r["kind"] in ("image", "audio", "video")
-        assert len(r["feature"]) == 8
-        assert abs(sum(r["feature"]) - 1.0) < 0.01
-        assert r["decode_error"] is None
-        assert r["byte_len"] > 0
-
-
-def test_media_resize_and_frame_sample(spark):
-    docs = docs_df(spark).limit(30)
-    media = media_table_from_documents(docs)
-    from fscrawler_spark.functions.multimodal import resize_images, sample_frames
-
-    resized = resize_images(media.filter(F.col("kind") == "image")).collect()
-    assert resized and all(r["width"] == 224 and r["height"] == 224 and r["decode_error"] is None for r in resized)
-
-    frames = sample_frames(media).collect()
-    assert frames
-    by_media = {}
-    for fr in frames:
-        by_media.setdefault(fr["media_id"], []).append(fr)
-    for mid, frs in by_media.items():
-        idxs = sorted(f["frame_idx"] for f in frs)
-        assert idxs == list(range(len(idxs)))  # contiguous 1->N fan-out
-        assert all(f["ts_ms"] == f["frame_idx"] * 1000 for f in frs)
 
 
 # --- streaming ---------------------------------------------------------------------

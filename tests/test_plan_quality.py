@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings
 from fscrawler_spark.operators.extract import extract_transcripts
-from fscrawler_spark.operators.incremental import merge_tags
-from fscrawler_spark.operators.deletes import prune_ignored
+from fscrawler_spark.operators.incremental import merge_tags_deep
 
 
 def plan_of(df) -> str:
@@ -22,18 +21,12 @@ def plan_of(df) -> str:
 def test_tag_merge_broadcasts(spark, transcripts_dir):
     src = spark.read.parquet(os.path.join(transcripts_dir, "transcripts.parquet"))
     tags = spark.createDataFrame(
-        [("megaconv-0", {"team": "a"})], "conv_id string, tags map<string,string>"
+        [("megaconv-0", '{"team": "a"}')], "conv_id string, tags_json string"
     )
-    plan = plan_of(merge_tags(src, tags))
+    docs = src.withColumn("external", F.lit(None).cast("string"))
+    plan = plan_of(merge_tags_deep(docs, tags))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_prune_ignored_broadcast_anti(spark, transcripts_dir):
-    src = spark.read.parquet(os.path.join(transcripts_dir, "transcripts.parquet"))
-    ignored = spark.createDataFrame([("megaconv-0",)], "conv_id string")
-    plan = plan_of(prune_ignored(src, ignored))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
 def test_size_gate_sits_below_udf(spark, transcripts_dir):

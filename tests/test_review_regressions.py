@@ -108,36 +108,6 @@ def test_changed_vs_snapshot_respects_md5(spark):
     assert changed_vs_snapshot(cur, prev, checksum_algo="sha256").count() == 1
 
 
-def test_registry_and_decrypt_honor_percent_limit(spark):
-    from fscrawler_spark.functions.registry import make_registry_udf
-    from fscrawler_spark.operators.passwords import encrypt_payload, retry_encrypted
-
-    st = ExtractSettings(num_buckets=2, indexed_chars_percent=0.5)
-    df = spark.createDataFrame([("x" * 100,)], "text string")
-    r = df.select(make_registry_udf(st)("text").alias("ex")).select("ex.*").collect()[0]
-    assert r["extracted"] == "x" * 50  # percent honored by registry path
-
-    src = _turns(spark, [("c", 0, encrypt_payload("pw", "y" * 100))])
-    docs = extract_transcripts(src, st)
-    pws = spark.createDataFrame([("c", ["pw"])], "conv_id string, passwords array<string>")
-    out = retry_encrypted(docs, src, pws, st).collect()[0]
-    assert out["extracted"] == "y" * 50  # percent honored by decrypt path
-
-
-def test_decrypted_meta_format_updated(spark):
-    from fscrawler_spark.operators.passwords import encrypt_payload, retry_encrypted
-
-    html = "<html><head><title>Inner</title></head><body><p>decrypted body text</p></body></html>"
-    src = _turns(spark, [("c", 0, encrypt_payload("pw", html))])
-    st = ExtractSettings(num_buckets=2)
-    docs = extract_transcripts(src, st)
-    pws = spark.createDataFrame([("c", ["pw"])], "conv_id string, passwords array<string>")
-    r = retry_encrypted(docs, src, pws, st).collect()[0]
-    assert r["mime"] == "text/html"
-    assert r["meta"]["format"] == "text/html"  # was stale octet-stream
-    assert r["meta"]["title"] == "Inner"
-
-
 def test_meta_tag_attribute_order_reversed():
     raw = extract_raw_meta('<html><head><meta content="Jane" name="author"></head></html>', "text/html")
     assert raw == {"author": "Jane"}
@@ -164,5 +134,3 @@ def test_metrics_backfilled_after_crash(spark, transcripts_dir, tmp_path):
     run_extraction_job(spark, inp, out, st)
     metrics = spark.read.parquet(os.path.join(out, "metrics"))
     assert metrics.select("part_bucket").distinct().count() == st.num_buckets
-
-

@@ -1,7 +1,7 @@
 """Round-2 control-plane + durability tests: partition-overwrite-mode
 safety, settings-fingerprint resume guard, restart cleanup, empty-input
-metrics, pause/resume/status, bounded wave re-drive, lazy retry_encrypted,
-idempotent staged deletes.
+metrics, pause/resume/status, bounded wave re-drive, idempotent staged
+deletes.
 """
 
 import os
@@ -198,24 +198,6 @@ def test_wave_failure_exhausts_bounded_retries(spark, transcripts_dir, tmp_path)
     assert m.retry_count == 2  # initial + 1 bounded retry
     assert "permanent sink failure" in m.last_error
     assert job_status(out)["retry_count"] == 2
-
-
-def test_retry_encrypted_is_lazy(spark):
-    """Building the retry plan must trigger ZERO Spark jobs (the old
-    head(1) gate executed the full upstream extraction up to 3x)."""
-    from fscrawler_spark.operators.passwords import retry_encrypted
-
-    docs = spark.createDataFrame(
-        [("c", 0, "text/plain", "x", [0], None)],
-        "conv_id string, turn_idx int, mime string, extracted string, spans array<long>, error string",
-    )
-    src = spark.createDataFrame([("c", 0, "x")], "conv_id string, turn_idx int, text string")
-    pws = spark.createDataFrame([("c", ["pw"])], "conv_id string, passwords array<string>")
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    retry_encrypted(docs, src, pws, ExtractSettings())
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before
 
 
 def test_cli_control_verbs_need_no_input(tmp_path, capsys):

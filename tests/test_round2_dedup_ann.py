@@ -69,7 +69,13 @@ def test_hyperplane_buckets_are_data_independent(spark):
         (i, [1.0] * 8 + [float(x) for x in rng.normal(0, 1, 56)]) for i in range(200)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    stats = embeddings.bucket_size_stats(df, bits=8, tables=1).collect()
+    planes = embeddings.random_hyperplanes(64, bits=8, tables=1)
+    stats = (
+        embeddings._bucketed(df, "vec_id", "embedding", planes, "id", "v")
+        .groupBy("table", "bucket")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
     # many distinct buckets, none dominating
     assert len(stats) > 10
     assert max(r["n"] for r in stats) < 100

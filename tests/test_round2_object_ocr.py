@@ -3,7 +3,7 @@
 Golden-style unit tests mirroring the reference's XmlDocParserTest /
 TikaDocParserTest shape (exact map entries, failure tolerance), plus the
 Spark-side plumbing: object column in the pipeline output, needs_ocr
-countable in lineage metrics, registry OCR-handler override.
+countable in lineage metrics.
 """
 
 import os
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings
 from fscrawler_spark.functions.extractors import (
-    ExtractResult,
     extract,
     extract_object,
     sniff_mime,
@@ -96,22 +95,6 @@ def test_broken_binary_still_parse_error():
     assert r.error == "encrypted"
 
 
-def test_registry_ocr_override_handles_images(spark):
-    """The OCR plugin path (TikaInstance.java:151-207 analog): a registry
-    override for image/* replaces the needs_ocr stub with a real handler."""
-    from fscrawler_spark.functions.registry import make_registry_udf
-
-    def fake_ocr(text, limit):
-        return ExtractResult("image/png", "ocr text", [(0, 8)], None)
-
-    udf = make_registry_udf(ExtractSettings(), overrides={"image/png": fake_ocr})
-    df = spark.createDataFrame([("\x89PNG\r\n\x1a\nxx",), ("plain",)], "text string")
-    rows = {r["ex"]["mime"]: r["ex"] for r in df.withColumn("ex", udf(F.col("text"))).collect()}
-    assert rows["image/png"]["extracted"] == "ocr text"
-    assert rows["image/png"]["error"] is None
-    assert rows["text/plain"]["extracted"] == "plain"
-
-
 # --- Spark-side plumbing ---------------------------------------------------
 
 
@@ -156,19 +139,3 @@ def test_needs_ocr_countable_in_metrics(spark, tmp_path):
     # genuinely broken row — the two counters partition the error space
     assert m["o"] == 1
     assert m["f"] == 1
-
-
-def test_decrypt_retry_carries_object(spark):
-    """Decrypted JSON payloads must populate the object column."""
-    from fscrawler_spark.operators.extract import extract_transcripts
-    from fscrawler_spark.operators.passwords import encrypt_payload, retry_encrypted
-
-    st = ExtractSettings(parse_object=True, num_buckets=4)
-    enc = encrypt_payload("pw", '{"k": "secret"}')
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    src = spark.createDataFrame([("c", 0, "user", enc, None, None)], schema)
-    docs = extract_transcripts(src, st)
-    pws = spark.createDataFrame([("c", ["bad", "pw"])], "conv_id string, passwords array<string>")
-    out = retry_encrypted(docs, src.select("conv_id", "turn_idx", "text"), pws, st).collect()[0]
-    assert out["error"] is None
-    assert out["object"] == {"k": "secret"}

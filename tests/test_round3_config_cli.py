@@ -250,20 +250,3 @@ def test_pyfiles_zip_is_per_process_and_cached(tmp_path):
     assert explicit.endswith("x.zip")
 
 
-def test_media_table_accepts_string_doc_ids(spark):
-    from fscrawler_spark.functions.multimodal import media_table_from_documents
-
-    docs = spark.createDataFrame(
-        [("9f86d081884c7d65", "hello"), ("aa11bb22cc33dd44", "world")],
-        "doc_id string, text string",
-    )
-    rows = media_table_from_documents(docs).collect()  # must not ANSI-crash
-    assert {r["kind"] for r in rows} <= {"image", "audio", "video"}
-
-
-def test_langid_tie_returns_und(spark):
-    from fscrawler_spark.functions import text_analysis
-
-    df = spark.createDataFrame([("de la",)], "text string")
-    got = df.select(text_analysis.langid_heuristic(F.col("text")).alias("l")).first()["l"]
-    assert got == "und"

@@ -1,7 +1,6 @@
 """Round-3 control-plane parity: HTTP status endpoint (CrawlerApi.java:
-55-151), nextCheck early-wake (FsParser.java:488-556, 1401-1417),
-chained password providers (plugins/password-{static,disk,chained}),
-and pack_sequences auto-split of oversize groups."""
+55-151), nextCheck early-wake (FsParser.java:488-556, 1401-1417) and
+pack_sequences auto-split of oversize groups."""
 
 import json
 import os
@@ -114,84 +113,6 @@ def test_cli_rest_port_and_next_check(spark, transcripts_dir, tmp_path, capsys):
     st = job_status(out)
     assert st["state"] == "COMPLETED"
     assert st["next_check"] is not None and st["next_check"] > time.time() - 60
-
-
-def test_chained_password_provider_precedence(spark, tmp_path):
-    """Reference PasswordChainedPlugin: providers consulted IN ORDER,
-    earlier candidates attempted first; disk provider reads sidecar
-    files; nesting chained is rejected."""
-    from fscrawler_spark.operators.passwords import (
-        ChainedPasswordProvider,
-        DiskPasswordProvider,
-        NoopPasswordProvider,
-        StaticPasswordProvider,
-    )
-
-    convs = spark.createDataFrame([("c1",), ("c2",)], "conv_id string")
-    root = tmp_path / "pw"
-    root.mkdir()
-    (root / "c1.password").write_text("disk-pw\nshared\n")
-
-    chain = ChainedPasswordProvider(
-        [
-            NoopPasswordProvider(),
-            StaticPasswordProvider(passwords=["shared"], per_conv={"c2": ["c2-only"]}),
-            DiskPasswordProvider(str(root)),
-        ]
-    )
-    got = {r["conv_id"]: r["passwords"] for r in chain.candidates(convs).collect()}
-    # static ('shared') precedes disk; dedup keeps the FIRST occurrence
-    assert got["c1"] == ["shared", "disk-pw"]
-    assert got["c2"] == ["c2-only", "shared"]
-
-    with pytest.raises(ValueError, match="cannot nest"):
-        ChainedPasswordProvider([chain])
-    with pytest.raises(ValueError, match="at least one"):
-        ChainedPasswordProvider([])
-
-
-def test_disk_provider_strips_crlf_sidecars(spark, tmp_path):
-    """A CRLF sidecar (Windows editor, git autocrlf) must not yield
-    candidates with a trailing \\r that never match the real password.
-    (Pins behavior end-to-end; text-mode universal newlines already
-    normalize \\r\\n, and rstrip('\\r\\n') keeps it safe under any
-    future newline=''/binary reader.)"""
-    from fscrawler_spark.operators.passwords import DiskPasswordProvider
-
-    convs = spark.createDataFrame([("c1",)], "conv_id string")
-    root = tmp_path / "pw"
-    root.mkdir()
-    (root / "c1.password").write_bytes(b"good-pw\r\nsecond\r\n")
-    got = DiskPasswordProvider(str(root)).candidates(convs).collect()
-    assert got[0]["passwords"] == ["good-pw", "second"]
-
-
-def test_chained_providers_drive_retry_encrypted(spark, tmp_path):
-    from fscrawler_spark.operators.extract import extract_transcripts
-    from fscrawler_spark.operators.passwords import (
-        ChainedPasswordProvider,
-        DiskPasswordProvider,
-        StaticPasswordProvider,
-        encrypt_payload,
-        retry_encrypted,
-    )
-
-    st = ExtractSettings(num_buckets=4)
-    enc = encrypt_payload("good-pw", "the secret body")
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    src = spark.createDataFrame([("c", 0, "user", enc, None, None)], schema)
-    docs = extract_transcripts(src, st)
-
-    root = tmp_path / "pw"
-    root.mkdir()
-    (root / "c.password").write_text("good-pw\n")
-    chain = ChainedPasswordProvider(
-        [StaticPasswordProvider(passwords=["wrong"]), DiskPasswordProvider(str(root))]
-    )
-    pws = chain.candidates(src.select("conv_id"))
-    out = retry_encrypted(docs, src.select("conv_id", "turn_idx", "text"), pws, st).collect()[0]
-    assert out["error"] is None
-    assert out["extracted"] == "the secret body"
 
 
 def test_pack_sequences_rejects_reserved_chunk_column(spark):

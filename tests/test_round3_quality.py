@@ -1,12 +1,10 @@
 """Round-3 module-review fixes: byte semantics, null handling, PII
-precision, tag precedence, metadata-only mode, password plumbing.
+precision, metadata-only mode.
 
-Reference parity: Fs.index_content (metadata-only crawl), DocUtils.merge
-tags-side precedence on ANY key conflict, sidecar passwords in nested
-dirs, file.filesize as BYTES.
+Reference parity: Fs.index_content (metadata-only crawl), file.filesize
+as BYTES.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings
@@ -31,21 +29,6 @@ def test_filesize_is_bytes_not_chars(spark):
     )
     row = extract_transcripts(df, ExtractSettings(num_buckets=2)).first()
     assert row["file"]["filesize"] == len("中文テキスト解析".encode())  # 24, not 8
-
-
-def test_merge_tags_null_valued_tag_still_overrides(spark):
-    from fscrawler_spark.operators.incremental import merge_tags
-
-    docs = spark.createDataFrame(
-        [("c1", {"k": "docval", "only_doc": "d"})], "conv_id string, tags map<string,string>"
-    )
-    tags = spark.createDataFrame(
-        [("c1", {"k": None, "only_tag": "t"})], "conv_id string, tags map<string,string>"
-    )
-    got = merge_tags(docs, tags).first()["tags"]
-    # tags side rules the conflict even with a deliberate NULL override
-    assert got["k"] is None
-    assert got["only_doc"] == "d" and got["only_tag"] == "t"
 
 
 def test_phone_redaction_does_not_eat_digit_run_tails(spark):
@@ -82,30 +65,6 @@ def test_repetition_stats_emits_zero_rows_for_short_docs(spark):
     assert rows["long"]["ngram_total"] == 5
 
 
-def test_disk_provider_reads_nested_sidecars(spark, tmp_path):
-    from fscrawler_spark.operators.passwords import DiskPasswordProvider
-
-    root = tmp_path / "pw"
-    (root / "teamA").mkdir(parents=True)
-    (root / "teamA" / "conv1.password").write_text("nested-pw\n")
-    convs = spark.createDataFrame([("teamA/conv1",)], "conv_id string")
-    got = DiskPasswordProvider(str(root)).candidates(convs).first()
-    assert got["passwords"] == ["nested-pw"]
-
-
-def test_retry_encrypted_guards_settings_mismatch(spark):
-    from fscrawler_spark.operators.passwords import retry_encrypted
-
-    docs = spark.createDataFrame(
-        [("c", 0, "encrypted", {"k": "v"})],
-        "conv_id string, turn_idx int, error string, object map<string,string>",
-    )
-    src = spark.createDataFrame([("c", 0, "ENC:x")], "conv_id string, turn_idx int, text string")
-    pws = spark.createDataFrame([("c", ["p"])], "conv_id string, passwords array<string>")
-    with pytest.raises(ValueError, match="parse_object"):
-        retry_encrypted(docs, src, pws, ExtractSettings(parse_object=False))
-
-
 def test_index_content_false_stores_metadata_only(spark):
     from fscrawler_spark.operators.extract import extract_transcripts
 
@@ -137,51 +96,3 @@ def test_index_content_false_filters_still_apply(spark):
     rows = extract_transcripts(df, st).collect()
     assert [r["turn_idx"] for r in rows] == [0]
     assert rows[0]["extracted"] is None  # still metadata-only
-
-
-def test_retry_encrypted_respects_index_content(spark):
-    from fscrawler_spark.operators.passwords import retry_encrypted
-
-    st = ExtractSettings(num_buckets=2, index_content=False)
-    docs = spark.createDataFrame(
-        [("c", 0, "application/octet-stream", None, [], "encrypted")],
-        "conv_id string, turn_idx int, mime string, extracted string, "
-        "spans array<bigint>, error string",
-    )
-    from fscrawler_spark.operators.passwords import encrypt_payload
-
-    src = spark.createDataFrame(
-        [("c", 0, encrypt_payload("secret", "the hidden body"))],
-        "conv_id string, turn_idx int, text string",
-    )
-    pws = spark.createDataFrame([("c", ["secret"])], "conv_id string, passwords array<string>")
-    out = retry_encrypted(docs, src, pws, st).filter("conv_id = 'c'").first()
-    # decryption succeeded (error cleared) but content stays unstored
-    assert out["error"] is None or out["error"] != "encrypted"
-    assert out["extracted"] is None and out["spans"] == []
-
-
-def test_retry_encrypted_guard_is_bidirectional(spark):
-    from fscrawler_spark.operators.passwords import retry_encrypted
-
-    docs = spark.createDataFrame(
-        [("c", 0, "encrypted")], "conv_id string, turn_idx int, error string"
-    )
-    src = spark.createDataFrame([("c", 0, "ENC:x")], "conv_id string, turn_idx int, text string")
-    pws = spark.createDataFrame([("c", ["p"])], "conv_id string, passwords array<string>")
-    with pytest.raises(ValueError, match="lacks"):
-        retry_encrypted(docs, src, pws, ExtractSettings(parse_object=True))
-
-
-def test_passwords_for_encrypted_restricts_universe(spark):
-    from fscrawler_spark.operators.passwords import (
-        StaticPasswordProvider,
-        passwords_for_encrypted,
-    )
-
-    docs = spark.createDataFrame(
-        [("enc1", 0, "encrypted"), ("ok1", 0, None), ("ok2", 0, None)],
-        "conv_id string, turn_idx int, error string",
-    )
-    out = passwords_for_encrypted(StaticPasswordProvider(passwords=["p"]), docs)
-    assert [r["conv_id"] for r in out.collect()] == ["enc1"]

@@ -1,11 +1,10 @@
 """Round-3 review fixes on the search algebra, sources, REST and
-streaming modules: ES zero_terms_query parity, terms aggs over semantic
-hits, semantic highlight/sort, sentinel-collision immunity
-(exclude_self), partitioned streaming sink, StatusServer lifecycle.
+streaming modules: ES zero_terms_query parity, semantic highlight/sort,
+sentinel-collision immunity (exclude_self), partitioned streaming sink,
+StatusServer lifecycle.
 
 Reference parity notes: ES `match` with zero analyzed tokens matches NO
-documents (zero_terms_query default "none"); ES computes aggs over knn
-hits; DocumentApi generates a unique id per id-less upload.
+documents (zero_terms_query default "none").
 """
 
 import os
@@ -20,7 +19,6 @@ from fscrawler_spark.operators.search import (
     Semantic,
     Term,
     execute_search,
-    execute_terms_aggs,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -32,20 +30,6 @@ def test_match_zero_terms_matches_nothing(spark):
     # and inside Bool.must it must not silently drop the clause
     req = SearchRequest(query=Bool(must=(Match("text", ""), Term("id", "a"))), size=10)
     assert execute_search(df, req).count() == 0
-
-
-def test_terms_aggs_over_semantic_hits(spark):
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    vec = e.filter(F.col("vec_id") == 3).select("embedding").first()[0]
-    e2 = e.withColumn("parity", F.col("vec_id") % 2)
-    req = SearchRequest(
-        query=Semantic("embedding", tuple(vec), k=5, id_col="vec_id", exact=True),
-        aggregations=("parity",),
-    )
-    aggs = execute_terms_aggs(e2, req)
-    rows = aggs["parity"].collect()
-    # aggregated over exactly the k semantic hits, not the whole corpus
-    assert sum(r["doc_count"] for r in rows) == 5
 
 
 def test_semantic_honors_sort_and_highlight(spark):
@@ -100,23 +84,6 @@ def test_streaming_sink_uses_partition_directories(spark, transcripts_dir, tmp_p
     assert parts, f"expected part_bucket=N dirs, got {os.listdir(out)}"
     got = spark.read.parquet(out)
     assert "part_bucket" in got.columns  # recovered as partition column
-
-
-def test_ingest_documents_epoch_ts(spark):
-    import datetime
-
-    from fscrawler_spark.sources.transcripts import ingest_documents
-
-    rows = ingest_documents(
-        spark,
-        [
-            {"text": "s", "ts": 1754000000},          # epoch seconds
-            {"text": "m", "ts": 1754000000000},       # epoch millis (ES-style)
-        ],
-    ).orderBy("turn_idx").collect()
-    want = datetime.datetime(2025, 7, 31, 22, 13, 20)
-    assert rows[0]["ts"] == want
-    assert rows[1]["ts"] == want
 
 
 def test_bucket_swap_refuses_streaming_sink_dir(spark, transcripts_dir, tmp_path):

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from fscrawler_spark.functions.bpe import (
     END,
     bpe_encode,
-    bpe_token_count,
     learn_bpe_from_histogram,
     merges_table,
     train_bpe,
@@ -173,8 +172,8 @@ def test_token_count_and_merges_table(spark):
     mt = merges_table(spark, merges)
     assert [(r.left, r.right) for r in mt.orderBy("rank").collect()] == merges
     counts = {
-        r["doc_id"]: r["n_bpe_tokens"]
-        for r in bpe_token_count(_df(spark, ["low low", None]), merges).collect()
+        r["doc_id"]: len(r["toks"] or [])
+        for r in bpe_encode(_df(spark, ["low low", None]), merges, out_col="toks").collect()
     }
     assert counts[1] == 0 and counts[0] >= 2
 

@@ -1,6 +1,5 @@
-"""Round 4: C4 cleaning recipe (curation.c4_clean_lines /
-c4_quality_flags — Raffel et al. 2020 §2.2). Hand-computed line
-fixtures per rule, a DuckDB value twin over a woven fixture, and plan
+"""Round 4: C4 cleaning recipe (curation.c4_quality_flags — Raffel et
+al. 2020 §2.2). Hand-computed line fixtures per rule, a DuckDB value twin over a woven fixture, and plan
 pins (all-JVM, no shuffle).
 """
 
@@ -10,7 +9,6 @@ from pyspark.sql import functions as F
 
 from fscrawler_spark.functions.curation import (
     C4_POLICY_SUBSTRINGS,
-    c4_clean_lines,
     c4_quality_flags,
 )
 
@@ -37,8 +35,7 @@ KEPT = [
 
 
 def _clean(spark, text, **kw):
-    df = spark.createDataFrame([(text,)], "text string")
-    return df.select(c4_clean_lines("text", **kw).alias("c")).collect()[0].c
+    return _flags(spark, text, **kw).cleaned_text
 
 
 def _flags(spark, text, **kw):

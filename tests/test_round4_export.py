@@ -291,12 +291,14 @@ def test_tokens_to_trainer_composition(spark, tmp_path):
     """The pieces compose end-to-end: exact BPE token counts ->
     greedy sequence packing -> deterministic shard export. What a real
     prepare-training-data run chains."""
-    from fscrawler_spark.functions.bpe import bpe_token_count, train_bpe
+    from fscrawler_spark.functions.bpe import bpe_encode, train_bpe
     from fscrawler_spark.functions.curation import pack_sequences
 
     docs = _corpus(spark, n=120).withColumn("conv", F.col("doc_id") % 10)
     merges = train_bpe(docs, text_col="text", num_merges=30, min_freq=2)
-    counted = bpe_token_count(docs, merges, text_col="text")
+    counted = bpe_encode(docs, merges, text_col="text", out_col="toks").withColumn(
+        "n_bpe_tokens", F.size("toks")
+    ).drop("toks")
     packed = pack_sequences(
         counted, token_col="n_bpe_tokens", max_tokens=64,
         part_col="conv", order_cols=("doc_id",),

@@ -145,36 +145,3 @@ def test_hash_family_validation(spark):
         incremental_near_dup(
             _df(spark, TICK2), _df(spark, TICK2), hash_family="sha1"
         )
-
-
-# --- quality-aware keeper selection (dedup.select_keepers) ------------------
-
-
-def test_select_keepers_by_quality(spark):
-    clusters = spark.createDataFrame(
-        [(1, 1), (5, 1), (9, 1), (11, 11), (12, 11), (20, 20)],
-        "id long, cluster_id long",
-    )
-    docs = spark.createDataFrame(
-        [(1, 0.2), (5, 0.9), (9, None), (11, 0.5), (12, 0.5), (20, None)],
-        "doc_id long, quality double",
-    )
-    out = dedup.select_keepers(clusters, docs, score_col="quality")
-    got = {r.id: r.is_keeper for r in out.collect()}
-    # best score wins (5 beats rep 1); NULL never shadows scored members
-    assert got == {1: False, 5: True, 9: False, 11: True, 12: False, 20: True}
-    # prefer='min' flips to lowest-score (e.g. perplexity)
-    got_min = {
-        r.id: r.is_keeper
-        for r in dedup.select_keepers(clusters, docs, score_col="quality", prefer="min").collect()
-    }
-    assert got_min[1] and not got_min[5] and not got_min[9]
-    # exactly one keeper per cluster either way
-    assert sum(got.values()) == 3 and sum(got_min.values()) == 3
-    # score_col=None falls back to min-id (the pipelines' default)
-    got_def = {
-        r.id: r.is_keeper for r in dedup.select_keepers(clusters, docs).collect()
-    }
-    assert got_def == {1: True, 5: False, 9: False, 11: True, 12: False, 20: True}
-    with pytest.raises(ValueError, match="prefer"):
-        dedup.select_keepers(clusters, docs, score_col="quality", prefer="best")

@@ -1,6 +1,5 @@
 """Round 4 smaller items: ANN count-cache amortization, REST
-GET /checkpoint, standard-analyzer Match parity, optional real PIL
-resize behind the env gate."""
+GET /checkpoint, standard-analyzer Match parity."""
 
 import json
 import os
@@ -27,8 +26,8 @@ def _http(method: str, url: str) -> dict:
 
 
 def test_second_ann_bits_resolution_triggers_no_count_job(spark, monkeypatch):
-    """lsh_topk + cosine_near_dup_pairs + bucket_size_stats over the SAME
-    corpus plan must pay ONE cardinality count (a full scan at 100 TB),
+    """lsh_topk + cosine_near_dup_pairs over the SAME corpus plan must
+    pay ONE cardinality count (a full scan at 100 TB),
     not one each."""
     corpus = spark.range(0, 500).select(
         F.col("id").alias("vec_id"),
@@ -268,55 +267,6 @@ def test_highlighter_uses_analyzed_terms(spark):
     )
     rows = execute_search(df, req).collect()
     assert rows and rows[0]["text_highlight"] == "big <em>Data</em> rocks"
-
-
-# --- optional real PIL resize ----------------------------------------------
-
-
-def _media_df(spark, payloads):
-    return spark.createDataFrame(
-        [(f"m{i}", "image", p) for i, p in enumerate(payloads)],
-        "media_id string, kind string, payload binary",
-    )
-
-
-def test_real_resize_with_pil_when_available(spark):
-    PIL = pytest.importorskip("PIL")  # noqa: F841 — skip cleanly in this container
-    import io
-
-    from PIL import Image
-
-    from fscrawler_spark.functions.multimodal import resize_images
-
-    buf = io.BytesIO()
-    Image.new("RGB", (10, 6), (120, 30, 200)).save(buf, format="PNG")
-    rows = resize_images(
-        _media_df(spark, [buf.getvalue(), b"not an image"]), width=4, height=4, fake=False
-    ).collect()
-    by_id = {r["media_id"]: r for r in rows}
-    ok = by_id["m0"]
-    assert ok["decode_error"] is None
-    img = Image.open(io.BytesIO(bytes(ok["payload"])))
-    assert img.size == (4, 4)
-    # a corrupt payload records an error, never fails the job
-    assert by_id["m1"]["payload"] is None
-    assert by_id["m1"]["decode_error"].startswith("decode_error:")
-
-
-def test_real_resize_without_pil_raises_not_implemented(spark):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL installed: the NotImplementedError gate is N/A here")
-    except ImportError:
-        pass
-    from fscrawler_spark.functions.multimodal import resize_images
-
-    with pytest.raises(Exception) as ei:
-        resize_images(_media_df(spark, [b"x"]), fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
 
 
 # --- widen: parallelism floor for CPU-amplified operators -------------------

@@ -133,65 +133,3 @@ def test_cli_decon_max_benchmark_requires_decon_variant(spark, tmp_path, capsys)
     )
     assert rc == 2
     assert "--decon-max-benchmark" in capsys.readouterr().err
-
-
-# --- real PIL media-feature decode (verdict item: the last stub tier) -------
-
-
-def _media_df(spark, payloads):
-    return spark.createDataFrame(
-        [(f"m{i}", "image", p) for i, p in enumerate(payloads)],
-        "media_id string, kind string, payload binary",
-    )
-
-
-def test_real_media_features_with_pil_when_available(spark):
-    pytest.importorskip("PIL")  # skip cleanly in this container
-    import io
-
-    from PIL import Image
-
-    from fscrawler_spark.functions.multimodal import extract_media_features
-
-    buf = io.BytesIO()
-    Image.new("RGB", (10, 6), (255, 0, 0)).save(buf, format="PNG")
-    rows = extract_media_features(
-        _media_df(spark, [buf.getvalue(), b"not an image"]), fake=False
-    ).collect()
-    by_id = {r["media_id"]: r for r in rows}
-    ok = by_id["m0"]
-    assert ok["decode_error"] is None
-    w, h, bands, mr, mg, mb, sr, sg, sb = ok["feature"]
-    assert (w, h, bands) == (10.0, 6.0, 3.0)
-    assert mr == pytest.approx(1.0) and mg == pytest.approx(0.0)
-    assert sr == pytest.approx(0.0) and sb == pytest.approx(0.0)
-    # a corrupt payload records an error, never fails the job
-    assert by_id["m1"]["feature"] is None
-    assert by_id["m1"]["decode_error"].startswith("decode_error:")
-
-
-def test_real_media_features_without_pil_raises_not_implemented(spark):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL installed: the NotImplementedError gate is N/A here")
-    except ImportError:
-        pass
-    from fscrawler_spark.functions.multimodal import extract_media_features
-
-    with pytest.raises(Exception) as ei:
-        extract_media_features(_media_df(spark, [b"x"]), fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
-
-
-def test_fake_media_features_unchanged(spark):
-    from fscrawler_spark.functions.multimodal import _fake_decode, extract_media_features
-
-    rows = extract_media_features(_media_df(spark, [b"abcabc", None]), fake=True).collect()
-    by_id = {r["media_id"]: r for r in rows}
-    assert by_id["m0"]["feature"] == pytest.approx(_fake_decode(b"abcabc"))
-    assert by_id["m0"]["byte_len"] == 6
-    assert by_id["m1"]["feature"] == pytest.approx([0.0] * 8)
-    assert by_id["m1"]["byte_len"] == 0

@@ -1,19 +1,14 @@
 """Round 5 self-review regression fixes.
 
-1. Streaming exactly-once survives history expiry: the per-stream
-   committed-epoch high-water mark rides EVERY manifest (carried forward
-   by snapshot_table._commit), so ``expire_unreferenced`` dropping an old
-   streaming append's manifest cannot erase its dedup record — a
-   replayed epoch is still skipped (previously it double-appended).
-2. ``compact()`` re-CLUSTERS by the stat/pruning keys instead of
+1. ``compact()`` re-CLUSTERS by the stat/pruning keys instead of
    round-robin ``repartition`` — round-robin sprayed every output file
    across the full key range, defeating stats pruning for every later
    keyed upsert/delete (each would rewrite ALL compacted files).
-3. A non-bucketed tick (parquet or snapshot-diff) over a table with a
+2. A non-bucketed tick (parquet or snapshot-diff) over a table with a
    bootstrapped snapshot index refreshes the index partition-scoped
    instead of leaving it permanently invalidated (which would cost the
    next bucketed fallback tick an O(corpus) rebuild).
-4. ``sft_examples(context_turns=None)``'s overflow guard fires only for
+3. ``sft_examples(context_turns=None)``'s overflow guard fires only for
    TARGET-role turns (the rows that become examples), as documented — a
    long non-target tail must not fail a job whose every emitted example
    is within the bound.
@@ -21,7 +16,6 @@
 
 import datetime as dt
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -54,66 +48,6 @@ def _rows(conv, lo, hi):
 
 
 # ---------------------------------------------------------------- 1 ----
-
-
-def test_streaming_replay_skipped_after_expire(spark, tmp_path):
-    """Expire the first streaming append's manifest, then replay: the
-    watermark in the CURRENT manifest must still dedup the epoch."""
-    from fscrawler_spark.streaming.micro_batch import (
-        run_streaming_extraction_to_table,
-    )
-
-    inp = str(tmp_path / "in")
-    root = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    _df(spark, _rows("c1", 0, 5)).coalesce(1).write.mode("append").parquet(inp)
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    _df(spark, _rows("c2", 0, 4)).coalesce(1).write.mode("append").parquet(inp)
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-
-    t = SnapshotTable(root)
-    assert t.read(spark).count() == 9
-    # the high-water mark rides the CURRENT manifest
-    m = t.manifest()
-    assert m.get("streams") and max(m["streams"].values()) >= 1
-
-    # GC the historical manifests (keeps only the current snapshot),
-    # then lose the stream checkpoint: Spark replays everything
-    t.expire_unreferenced(keep_snapshots=1)
-    assert len(t.snapshot_ids()) == 1
-    shutil.rmtree(ckpt)
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    assert t.read(spark).count() == 9  # no double-append
-    # nothing new was committed by the replayed drain
-    assert len(t.snapshot_ids()) == 1
-
-
-def test_stream_watermark_carries_through_other_commits(spark, tmp_path):
-    """A non-streaming writer advancing the table (compaction, batch
-    append) must not drop the stream watermarks from the manifest."""
-    from fscrawler_spark.streaming.micro_batch import (
-        run_streaming_extraction_to_table,
-    )
-
-    inp = str(tmp_path / "in")
-    root = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    _df(spark, _rows("c1", 0, 5)).coalesce(1).write.mode("append").parquet(inp)
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    t = SnapshotTable(root)
-    wm = t.manifest().get("streams")
-    assert wm
-    # external batch append advances the table
-    docs_schema_rows = t.read(spark).limit(1).collect()
-    t.append(spark, spark.createDataFrame(docs_schema_rows, t.read(spark).schema))
-    assert t.manifest().get("streams") == wm
-    # replay after the external commit still dedups
-    shutil.rmtree(ckpt)
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    assert t.read(spark).count() == 6
-
-
-# ---------------------------------------------------------------- 2 ----
 
 
 def test_compact_preserves_key_clustering(spark, tmp_path):
@@ -149,7 +83,7 @@ def test_compact_preserves_key_clustering(spark, tmp_path):
     assert 1 <= len(matched) < len(new)
 
 
-# ---------------------------------------------------------------- 3 ----
+# ---------------------------------------------------------------- 2 ----
 
 
 def test_parquet_tick_refreshes_bootstrapped_index(spark, transcripts_dir, tmp_path):
@@ -184,7 +118,7 @@ def test_parquet_tick_refreshes_bootstrapped_index(spark, transcripts_dir, tmp_p
         spark.sql(f"DROP TABLE IF EXISTS {snap.snapshot_table_name(out)}")
 
 
-# ---------------------------------------------------------------- 4 ----
+# ---------------------------------------------------------------- 3 ----
 
 
 def test_sft_unbounded_guard_ignores_non_target_turns(spark):

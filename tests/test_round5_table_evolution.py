@@ -1,14 +1,11 @@
 """Round 5 snapshot-table round-out: rollback commits, additive schema
-evolution, the optimistic append-retry loop, and the streaming
-foreachBatch sink that commits one atomic snapshot per epoch
-(streaming/micro_batch.run_streaming_extraction_to_table)."""
+evolution and the optimistic append-retry loop."""
 
 from __future__ import annotations
 
 import datetime as dt
 import json
 import os
-import shutil
 
 import pytest
 
@@ -152,93 +149,6 @@ def test_append_retries_past_a_conflicting_commit(spark, tmp_path):
     assert _texts(t.read(spark)) == _texts(t.read(spark, snapshot_id=1)) + [
         ("b", 0), ("b", 1)
     ]
-
-
-# --- streaming sink → snapshot commits -----------------------------------
-
-
-def _write_input(spark, path, rows):
-    _df(spark, rows).coalesce(1).write.mode("append").parquet(path)
-
-
-def test_streaming_to_table_commits_snapshots(spark, tmp_path):
-    from fscrawler_spark.streaming.micro_batch import (
-        run_streaming_extraction_to_table,
-    )
-
-    inp = str(tmp_path / "in")
-    root = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    _write_input(spark, inp, _rows("c1", 0, 6))
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-
-    t = SnapshotTable(root)
-    assert t.exists()
-    first = t.current_id()
-    got = t.read(spark)
-    assert got.count() == 6
-    # extraction actually ran (docs schema, not raw transcripts)
-    assert "extracted" in got.columns and "part_bucket" in got.columns
-    m = t.manifest(first)
-    assert m["operation"] == "append" and m["epoch_id"] is not None
-    assert m["stream_id"]
-
-    # second drain with NEW files appends another snapshot; old rows kept
-    _write_input(spark, inp, _rows("c2", 0, 4))
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    assert t.current_id() > first
-    assert t.read(spark).count() == 10
-    # a drain with NOTHING new commits nothing
-    cur = t.current_id()
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    assert t.current_id() == cur
-
-
-def test_streaming_to_table_replayed_epoch_is_skipped(spark, tmp_path):
-    """Crash-replay twin: wipe the STREAM checkpoint (so Spark replays
-    epoch 0 over the same input) while keeping the table — the
-    (stream_id, epoch_id) guard must skip the duplicate append."""
-    from fscrawler_spark.streaming.micro_batch import (
-        run_streaming_extraction_to_table,
-    )
-
-    inp = str(tmp_path / "in")
-    root = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    _write_input(spark, inp, _rows("c1", 0, 5))
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    t = SnapshotTable(root)
-    assert t.read(spark).count() == 5
-
-    shutil.rmtree(ckpt)  # lose the acknowledgment, keep the table
-    run_streaming_extraction_to_table(spark, inp, root, ckpt)
-    assert t.read(spark).count() == 5  # no double-append
-    assert [h["operation"] for h in t.history()].count("append") == 1
-
-
-def test_streaming_to_table_rows_match_batch_extraction(spark, tmp_path):
-    """Per-turn parity with the batch plan over the same input."""
-    from fscrawler_spark.config import ExtractSettings
-    from fscrawler_spark.operators.extract import extract_transcripts
-    from fscrawler_spark.sources.transcripts import read_transcripts
-    from fscrawler_spark.streaming.micro_batch import (
-        run_streaming_extraction_to_table,
-    )
-
-    inp = str(tmp_path / "in")
-    _write_input(spark, inp, _rows("c1", 0, 8))
-    run_streaming_extraction_to_table(
-        spark, inp, str(tmp_path / "t"), str(tmp_path / "ck")
-    )
-    stream_rows = sorted(
-        (r.conv_id, r.turn_idx, r.extracted)
-        for r in SnapshotTable(str(tmp_path / "t")).read(spark).collect()
-    )
-    batch = extract_transcripts(read_transcripts(spark, inp), ExtractSettings())
-    batch_rows = sorted(
-        (r.conv_id, r.turn_idx, r.extracted) for r in batch.collect()
-    )
-    assert stream_rows == batch_rows
 
 
 def test_cli_table_rollback(spark, tmp_path, capsys):

@@ -1,4 +1,4 @@
-"""Search DSL lowering, password retry branch, lang-detect column, CLI."""
+"""Search DSL lowering, lang-detect column, CLI."""
 
 import os
 
@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings
 from fscrawler_spark.operators.extract import extract_transcripts
-from fscrawler_spark.operators.passwords import encrypt_payload, retry_encrypted
 from fscrawler_spark.operators.search import (
     Bool,
     Match,
@@ -15,7 +14,6 @@ from fscrawler_spark.operators.search import (
     SearchRequest,
     Term,
     execute_search,
-    execute_terms_aggs,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -65,13 +63,6 @@ def test_prefix_mustnot_and_sort_limit(spark):
     assert chars == sorted(chars, reverse=True)
 
 
-def test_terms_aggs_on_filtered_set(spark):
-    req = SearchRequest(query=Term("lang", "en"), aggregations=("source",))
-    aggs = execute_terms_aggs(docs(spark), req)
-    total = aggs["source"].agg(F.sum("doc_count")).collect()[0][0]
-    assert total == docs(spark).filter(F.col("lang") == "en").count()
-
-
 def test_search_filter_pushdown(spark):
     """Term/Range predicates must reach the parquet scan (PushedFilters)."""
     req = SearchRequest(query=Bool(must=(Term("lang", "en"), Range("n_chars", gte=100))))
@@ -83,42 +74,6 @@ def test_search_filter_pushdown(spark):
     )
     assert "PushedFilters: [" in plan
     assert "IsNotNull(lang)" in plan or "EqualTo(lang,en)" in plan
-
-
-# --- password retry (T6) ----------------------------------------------------------
-
-def test_password_retry_branch(spark):
-    src = spark.createDataFrame(
-        [
-            ("c1", 0, encrypt_payload("hunter2", "secret plain content")),
-            ("c1", 1, "normal plain turn"),
-            ("c2", 0, encrypt_payload("other-pass", "c2 content")),
-            ("c3", 0, "ENC:deadbeef:unknowable"),  # no password known
-        ],
-        "conv_id string, turn_idx int, text string",
-    ).withColumns(
-        {
-            "role": F.lit("user"),
-            "tool": F.lit(None).cast("string"),
-            "ts": F.lit("2024-01-01 00:00:00").cast("timestamp"),
-        }
-    )
-    settings = ExtractSettings(num_buckets=4)
-    docs_df = extract_transcripts(src, settings)
-    passwords = spark.createDataFrame(
-        [("c1", ["wrong", "hunter2"]), ("c2", ["other-pass"])],
-        "conv_id string, passwords array<string>",
-    )
-    out = retry_encrypted(docs_df, src, passwords, settings)
-    by_key = {(r["conv_id"], r["turn_idx"]): r for r in out.collect()}
-    assert by_key[("c1", 0)]["extracted"] == "secret plain content"
-    assert by_key[("c1", 0)]["error"] is None
-    assert by_key[("c2", 0)]["extracted"] == "c2 content"
-    assert by_key[("c1", 1)]["extracted"] == "normal plain turn"
-    # unknown password stays encrypted-null, job never fails
-    assert by_key[("c3", 0)]["extracted"] is None
-    assert by_key[("c3", 0)]["error"] == "encrypted"
-    assert out.count() == 4
 
 
 # --- lang detect column (T9) --------------------------------------------------------

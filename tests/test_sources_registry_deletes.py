@@ -1,5 +1,5 @@
-"""Tests: extractor registry (plugin SPI analog), sources + schema
-validation, delete application, ignore pruning, conversation summary."""
+"""Tests: sources + schema validation, delete application, conversation
+summary."""
 
 import os
 
@@ -7,58 +7,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings
-from fscrawler_spark.functions.extractors import ExtractResult
-from fscrawler_spark.functions.registry import make_registry_udf
-from fscrawler_spark.operators.deletes import apply_deletes, prune_ignored
+from fscrawler_spark.operators.deletes import apply_deletes
 from fscrawler_spark.operators.extract import extract_transcripts
-from fscrawler_spark.operators.stats import conversation_summary, run_statistics
+from fscrawler_spark.operators.stats import conversation_summary
 from fscrawler_spark.plans.pipeline import run_extraction_job
 from fscrawler_spark.sources.transcripts import (
     SchemaError,
-    ingest_documents,
     read_transcripts,
     validate_schema,
 )
 
 SETTINGS = ExtractSettings(num_buckets=8)
-
-
-# --- registry ----------------------------------------------------------------
-
-def test_registry_override_handler(spark):
-    def shouty(text, limit):
-        return ExtractResult("text/plain", text.upper()[:limit], [(0, min(len(text), limit))], None)
-
-    udf = make_registry_udf(ExtractSettings(), overrides={"text/plain": shouty})
-    df = spark.createDataFrame([("hello world",), ('{"k": "v"}',)], "text string")
-    rows = df.select(udf("text").alias("ex")).select("ex.*").collect()
-    assert rows[0]["extracted"] == "HELLO WORLD"  # override applied
-    assert rows[1]["extracted"] == "v"  # builtin json untouched
-
-
-def test_registry_handler_failure_tolerated(spark):
-    def boom(text, limit):
-        raise RuntimeError("plugin bug")
-
-    udf = make_registry_udf(ExtractSettings(), overrides={"text/plain": boom})
-    df = spark.createDataFrame([("plain text",)], "text string")
-    r = df.select(udf("text").alias("ex")).select("ex.*").collect()[0]
-    assert r["extracted"] is None and r["error"] == "parse_error"
-
-
-def test_registry_matches_builtin_udf(spark, transcripts_dir):
-    from fscrawler_spark.functions.udfs import make_extract_udf
-
-    src = spark.read.parquet(os.path.join(transcripts_dir, "transcripts.parquet")).limit(500)
-    a = src.select("conv_id", "turn_idx", make_extract_udf(ExtractSettings())("text").alias("ex_a"))
-    b = src.select("conv_id", "turn_idx", make_registry_udf(ExtractSettings())("text").alias("ex_b"))
-    joined = a.join(b, ["conv_id", "turn_idx"])
-    # map-typed 'raw' is not comparable; compare the rest of the struct
-    fields = ["mime", "extracted", "spans", "error", "title"]
-    pred = F.lit(True)
-    for f in fields:
-        pred = pred & F.col(f"ex_a.{f}").eqNullSafe(F.col(f"ex_b.{f}"))
-    assert joined.filter(~pred).count() == 0
 
 
 # --- sources -------------------------------------------------------------------
@@ -74,40 +33,7 @@ def test_read_transcripts_casts(spark, transcripts_dir):
     assert [f.name for f in df.schema.fields] == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
-def test_ingest_documents(spark):
-    df = ingest_documents(spark, [{"text": "hello"}, {"text": "<html><body><p>x y z</p></body></html>", "role": "tool"}])
-    assert df.count() == 2
-    out = extract_transcripts(df, SETTINGS)
-    assert out.count() == 2
-
-
-def test_ingest_documents_separate_calls_never_collide(spark):
-    """Reference DocumentApi generates a unique id per upload: two
-    id-less ingests must not share (conv_id, turn_idx) or the derived
-    doc_id would silently merge distinct documents downstream."""
-    a = ingest_documents(spark, [{"text": "A"}]).first()
-    b = ingest_documents(spark, [{"text": "B"}]).first()
-    assert (a["conv_id"], a["turn_idx"]) != (b["conv_id"], b["turn_idx"])
-    # explicit default_conv opts back into a stable identity
-    c = ingest_documents(spark, [{"text": "C"}], default_conv="fixed").first()
-    assert c["conv_id"] == "fixed"
-
-
-def test_ingest_documents_ts_datetime_and_malformed(spark):
-    import datetime
-
-    rows = ingest_documents(
-        spark,
-        [
-            {"text": "x", "ts": datetime.datetime(2026, 2, 3, 4, 5, 6)},
-            {"text": "y", "ts": "not-a-date"},  # nulls, never ANSI-crashes
-        ],
-    ).orderBy("turn_idx").collect()
-    assert rows[0]["ts"] == datetime.datetime(2026, 2, 3, 4, 5, 6)
-    assert rows[1]["ts"] is None
-
-
-# --- deletes / pruning -----------------------------------------------------------
+# --- deletes -------------------------------------------------------------------
 
 def test_apply_deletes_rewrites_only_affected_buckets(spark, transcripts_dir, tmp_path):
     out = str(tmp_path / "deltest")
@@ -126,17 +52,9 @@ def test_apply_deletes_rewrites_only_affected_buckets(spark, transcripts_dir, tm
     assert after.join(vdf, ["conv_id", "turn_idx"]).count() == 0
 
 
-def test_prune_ignored(spark, transcripts_dir):
-    src = spark.read.parquet(os.path.join(transcripts_dir, "transcripts.parquet"))
-    ignored = spark.createDataFrame([("megaconv-0",)], "conv_id string")
-    out = prune_ignored(src, ignored)
-    assert out.filter(F.col("conv_id") == "megaconv-0").count() == 0
-    assert out.count() == src.filter(F.col("conv_id") != "megaconv-0").count()
-
-
 # --- summaries --------------------------------------------------------------------
 
-def test_conversation_summary_and_run_stats(spark, transcripts_dir):
+def test_conversation_summary(spark, transcripts_dir):
     src = spark.read.parquet(os.path.join(transcripts_dir, "transcripts.parquet"))
     docs = extract_transcripts(src, SETTINGS)
     summ = conversation_summary(docs)
@@ -145,9 +63,6 @@ def test_conversation_summary_and_run_stats(spark, transcripts_dir):
     assert mega["turn_count"] == expected_turns
     assert mega["last_turn"] == expected_turns - 1
     assert mega["bytes_in"] > 0
-    stats = run_statistics(docs).collect()[0]
-    assert stats["nb_doc_scan"] == src.count()
-    assert stats["nb_parse_failures"] > 0
 
 
 # --- cli dry run -------------------------------------------------------------------

@@ -74,75 +74,19 @@ def audit(df) -> dict:
 
 
 def main() -> None:
-    import __spark_entry__ as entry_mod
     from fscrawler_spark.session import get_spark
 
     spark = get_spark(app="plan-audit", master="local[4]", shuffle_partitions=4)
     try:
-        _generate(spark, entry_mod)
+        _generate(spark)
     finally:
         spark.stop()
 
 
-def _generate(spark, entry_mod) -> None:
-    import bench
+def _generate(spark) -> None:
+    from bench_extra import all_queries
 
-    qs = entry_mod.queries()
-    # bench-only operators (not in the driver's capped 50-query registry).
-    # semantic_dedup's tail is a materialized CC (its plan would audit as
-    # a bare LogicalRDD scan), so the audit covers the candidate stage —
-    # the part with a corpus-scale plan.
-    def _q_semantic_pairs(spark, sf_dir):
-        import os as _os
-
-        from pyspark.sql import functions as _F
-
-        from fscrawler_spark.functions import embeddings as _e
-
-        emb = spark.read.parquet(_os.path.join(sf_dir, "embeddings.parquet"))
-        both = emb.unionByName(emb.withColumn("vec_id", _F.col("vec_id") + 1_000_000))
-        cents = _e.sampled_centroids(both, 64)
-        return _e.semantic_pairs(_e.cell_assignments(both, cents), 0.99)
-
-    def _q_bpe_encode(spark, sf_dir):
-        import os as _os
-
-        from fscrawler_spark.functions.bpe import bpe_encode, train_bpe
-
-        d = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-        # training runs its own (audited-elsewhere) histogram jobs; the
-        # plan under audit is the corpus-scale ENCODE map
-        merges = train_bpe(d, text_col="text", num_merges=16)
-        return bpe_encode(d, merges, text_col="text")
-
-    qs["q_semantic_pairs"] = _q_semantic_pairs
-    qs["q_dsir_select"] = bench._q_dsir_select
-    qs["q_bpe_encode"] = _q_bpe_encode
-    qs["q_sft_pairs"] = bench._q_sft_pairs
-    qs["q_text_embed"] = bench._q_text_embed
-
-    def _q_fuzzy_decon(spark, sf_dir):
-        import os as _os
-
-        from fscrawler_spark.functions.curation import fuzzy_decontaminate
-
-        d = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-        return fuzzy_decontaminate(d, d.filter("doc_id % 31 = 0").selectExpr(
-            "doc_id as bench_id", "text"
-        ))
-
-    def _q_semantic_decon(spark, sf_dir):
-        import os as _os
-
-        from fscrawler_spark.functions.curation import semantic_decontaminate
-
-        d = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-        return semantic_decontaminate(d, d.filter("doc_id % 31 = 0").selectExpr(
-            "doc_id as bench_id", "text"
-        ))
-
-    qs["q_fuzzy_decon"] = _q_fuzzy_decon
-    qs["q_semantic_decon"] = _q_semantic_decon
+    qs = all_queries()
     out = ["# PLANS — physical-plan audit of the headline queries", "",
            f"Generated by `python tools/plan_audit.py` at {SF_DIR} (regenerate after plan-shape changes).",
            "",
