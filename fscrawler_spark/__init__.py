@@ -6,7 +6,7 @@ DataFrame job over a partitioned table of multi-turn conversation/agent
 transcripts:
 
 * MIME-sniffed per-turn dispatch (reference: tika/TikaInstance.java:119-218)
-* vectorized Arrow/pandas UDF extraction: HTML boilerplate strip,
+* vectorized Arrow UDF extraction: HTML boilerplate strip,
   PDF-like layout parse, JSON/XML payloads, encrypted/broken tolerance
   (reference: tika/TikaDocParser.java)
 * extracted main-content text + char-offset spans, truncation semantics

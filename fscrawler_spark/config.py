@@ -8,7 +8,7 @@ TikaDocParser.java:141-156 (indexed_chars), FsCrawlerUtil.java:100-216
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 DEFAULT_INDEXED_CHARS = 100_000  # reference: TikaDocParser.java:141
@@ -114,16 +114,6 @@ class ExtractSettings:
     # scale knobs
     num_buckets: int = 32          # output partition buckets (conv-hash)
     skew_salt: int = 8             # salt fan-out for mega-conversations
-    arrow_batch_rows: int = 2_000  # spark.sql.execution.arrow.maxRecordsPerBatch
-    # batch-local memoization of IDENTICAL turn texts (system prompts and
-    # tool boilerplate repeat heavily in real transcript corpora): probe
-    # each Arrow batch's prefix with a C-level dictionary_encode, and when
-    # duplication shows up extract only the unique texts and scatter the
-    # results back with one take(). Output is byte-identical either way
-    # (extract is a pure function of (text, settings)), so this knob is
-    # deliberately NOT part of the settings fingerprint — flipping it
-    # never invalidates a checkpoint.
-    dedupe_turns: bool = True
     # bounded driver re-drive of a failed write wave (reference: network
     # retry x10 w/ backoff, FsParser.java:104-107,811-850); retries are
     # recorded in the manifest (retry_count / last_error)
@@ -162,8 +152,6 @@ class ExtractSettings:
             )
         if self.ignore_above is not None and self.ignore_above < 0:
             raise ValueError(f"ignore_above must be >= 0, got {self.ignore_above}")
-        if self.arrow_batch_rows < 1:
-            raise ValueError(f"arrow_batch_rows must be >= 1, got {self.arrow_batch_rows}")
         if self.max_wave_retries < 0:
             raise ValueError(f"max_wave_retries must be >= 0, got {self.max_wave_retries}")
         if self.checkpoint_waves < 1:

@@ -20,7 +20,7 @@ standard corpus-scale shape every production tokenizer trainer uses
    per-iteration job overhead; the histogram is small (``max_words``
    rows) and the loop is O(num_merges * total symbol length).
 3. Encoding is embarrassingly parallel: the merge table broadcasts to
-   every executor and an Arrow-batched pandas UDF encodes each text,
+   every executor and an Arrow UDF encodes each text,
    memoizing per-word encodings per batch (Zipf makes the hit rate
    high). No shuffle at all — encoding rides whatever partitioning the
    scan produced.
@@ -35,20 +35,20 @@ training is partitioning-stable (pinned by tests).
 
 from __future__ import annotations
 
+import functools
 import re
 
+import pyarrow as pa  # module top: arrow_udf type hints must resolve at import
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..session import widen_slim
 from .curation import WS_SPLIT_JAVA, ws_trim
+from .memo import CappedMemo
 
-# Worker-resident word->tokens memo, keyed by the merge-table fingerprint
-# so a re-trained tokenizer can never serve stale encodings. Lives at
-# module level so a reused Python worker keeps it across batches and tasks
-# (guide §4.5; the same pattern as lm_quality's md5 memo).
-_ENCODE_MEMO: dict[str, dict[str, list[str]]] = {}
-_ENCODE_MEMO_CAP = 500_000
+# Worker-resident word->tokens memo (memo.py), keyed by the merge-table
+# fingerprint so a re-trained tokenizer can never serve stale encodings.
+_ENCODE_MEMO: dict[str, CappedMemo] = {}
 
 END = "</w>"
 
@@ -196,6 +196,20 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
+def _word_memo(ranks_key: str, ranks: dict) -> CappedMemo:
+    """The worker's word memo for one merge table. A module-level
+    function, so the UDF closure pickles it by reference and every task
+    on a reused worker shares ``_ENCODE_MEMO`` (a global the closure
+    named itself would be pickled by value: a fresh dict per task)."""
+    cache = _ENCODE_MEMO.get(ranks_key)
+    if cache is None:
+        # one live merge table per worker is the common case — drop
+        # stale tables rather than growing per re-train
+        _ENCODE_MEMO.clear()
+        cache = _ENCODE_MEMO[ranks_key] = CappedMemo(functools.partial(_encode_word, ranks=ranks))
+    return cache
+
+
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -206,52 +220,33 @@ def bpe_encode(
     """Append ``out_col: array<string>`` — the BPE token sequence.
 
     Merge ranks broadcast once per executor (the table is
-    ``num_merges`` rows — KB-scale); encoding is a pandas UDF whose
-    per-word memo lives at WORKER level keyed by the merge table's
-    fingerprint (guide §4.5 — a reused Python worker keeps it across
-    batches AND tasks; Zipf repetition makes the common words free after
-    the first hit, where the former per-batch cache re-derived them
-    every 2000 rows). Values are a pure function of (word, merges), so
-    caching cannot change any encoding; the cap bounds worker RSS and a
-    clear() on overflow keeps the hot head resident — the same policy
-    as lm_quality's md5 memo. This is the sanctioned Python slow path:
+    ``num_merges`` rows — KB-scale); encoding is an Arrow UDF whose
+    per-word memo (memo.CappedMemo, keyed by the merge table's
+    fingerprint) makes the common words free after the first hit, where
+    the former per-batch cache re-derived them every 2000 rows. Values
+    are a pure function of (word, merges), so caching cannot change any
+    encoding. This is the sanctioned Python slow path:
     subword merging is genuinely not expressible in Catalyst
     expressions, and the UDF rides the scan partitioning (no shuffle).
     """
     import hashlib
     import pickle
 
-    from pyspark.sql.functions import pandas_udf
-
     ranks = {pair: i for i, pair in enumerate(merges)}
-    lc = lowercase
     ranks_key = hashlib.md5(pickle.dumps(merges)).hexdigest()
 
-    @pandas_udf(ArrayType(StringType()))
-    def _enc(texts):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        cache = _ENCODE_MEMO.get(ranks_key)
-        if cache is None:
-            # one live merge table per worker is the common case — drop
-            # stale tables rather than growing per re-train
-            _ENCODE_MEMO.clear()
-            cache = _ENCODE_MEMO[ranks_key] = {}
+    @F.arrow_udf(ArrayType(StringType()))
+    def _enc(texts: pa.Array) -> pa.Array:
+        cache = _word_memo(ranks_key, ranks)
 
         def enc(text):
             if text is None:
                 return None
             toks: list[str] = []
-            t = text.lower() if lc else text
-            for w in _py_words(t):
-                got = cache.get(w)
-                if got is None:
-                    if len(cache) >= _ENCODE_MEMO_CAP:
-                        cache.clear()
-                    got = cache[w] = _encode_word(w, ranks)
-                toks.extend(got)
+            for w in _py_words(text.lower() if lowercase else text):
+                toks.extend(cache[w])
             return toks
 
-        return pd.Series([enc(t) for t in texts])
+        return pa.array([enc(t) for t in texts.to_pylist()], pa.list_(pa.string()))
 
     return df.withColumn(out_col, _enc(F.col(text_col)))

@@ -6,7 +6,7 @@ contamination checks.
 Everything except pack_sequences is a pure DataFrame composition (no
 Python UDFs — whole-stage codegen, shuffles only where a groupBy/join
 key demands one); pack_sequences alone carries running state and runs as
-an applyInPandas grouped map. Determinism everywhere — sampling and
+an applyInArrow grouped map. Determinism everywhere — sampling and
 splits hash content keys rather than using RNG state, so adding
 executors, re-running, or resuming never changes which rows are selected
 (the property that makes 100-TB incremental pipelines reproducible).
@@ -139,16 +139,16 @@ def pack_sequences(
     Greedy packing carries running state row-to-row (the bin RESETS at a
     boundary), which no plain window function expresses (a cumsum
     ceil-division variant silently overflows packs at bin boundaries) —
-    so this is an ``applyInPandas`` grouped map: sequential WITHIN a
+    so this is an ``applyInArrow`` grouped map: sequential WITHIN a
     group, all ``part_col`` groups in parallel.
 
     Scale note: one shuffle on ``part_col`` (conversation, shard,
     bucket) — never a global order, which would serialize 10^12 rows
-    through one task. An applyInPandas group materializes as ONE pandas
-    frame in the worker, so a mega-group would OOM: groups larger than
+    through one task. An applyInArrow group materializes as ONE Arrow
+    table in the worker, so a mega-group would OOM: groups larger than
     ``max_group_rows`` are auto-split into deterministic CONSECUTIVE
     chunks (row_number over ``order_cols`` — the window sorts with disk
-    spill, unlike the pandas materialization) and packed per chunk. A
+    spill, unlike the Arrow materialization) and packed per chunk. A
     pack never spans a chunk boundary, so the split costs at most one
     underfull pack per chunk; pack ids stay unique and monotone within
     the group (chunk_idx * max_group_rows + within-chunk pack) but are
@@ -156,38 +156,42 @@ def pack_sequences(
     second exchange — pass max_group_rows=None when every group is known
     to be small (restores the single-shuffle plan and consecutive ids).
     """
-    import pandas as pd
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
     order = list(order_cols)
     # NOT df.schema.add(...): StructType.add MUTATES in place and
     # DataFrame caches its schema object — df.columns would grow a
-    # phantom pack_id and applyInPandas would fail to resolve it
+    # phantom pack_id and applyInArrow would fail to resolve it
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("pack_id", T.LongType())]
     )
 
-    def _pack_frame(pdf: "pd.DataFrame", pack_offset: int) -> "pd.DataFrame":
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
+    def _pack_table(tbl, pack_offset: int):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        # Arrow's sort is stable: ties keep arrival order
+        keys = [(c, "ascending") for c in order]
+        tbl = tbl.take(pc.sort_indices(tbl, keys, null_placement="at_end"))
+        tokens = pc.cast(pc.fill_null(tbl.column(token_col), 0), pa.int64(), safe=False)
         packs = []
         acc = 0
         pack = -1
-        for t in pdf[token_col].fillna(0).astype("int64"):
+        for t in tokens.to_pylist():
             if pack < 0 or acc + t > max_tokens:
                 pack += 1
-                acc = int(t)
+                acc = t
             else:
-                acc += int(t)
+                acc += t
             packs.append(pack + pack_offset)
-        pdf["pack_id"] = packs
-        return pdf
+        return tbl.append_column("pack_id", pa.array(packs, pa.int64()))
 
     if max_group_rows is None:
-        def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            return _pack_frame(pdf, 0)
+        def _pack(tbl):
+            return _pack_table(tbl, 0)
 
-        return df.groupBy(part_col).applyInPandas(_pack, schema=out_schema)
+        return df.groupBy(part_col).applyInArrow(_pack, schema=out_schema)
 
     if max_group_rows < 1:
         raise ValueError(f"max_group_rows must be >= 1, got {max_group_rows}")
@@ -203,11 +207,11 @@ def pack_sequences(
         F.floor((F.row_number().over(w) - F.lit(1)) / F.lit(max_group_rows)).cast("long"),
     )
 
-    def _pack_chunk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        offset = int(pdf[chunk_col].iloc[0]) * max_group_rows
-        return _pack_frame(pdf.drop(columns=[chunk_col]), offset)
+    def _pack_chunk(tbl):
+        offset = tbl.column(chunk_col)[0].as_py() * max_group_rows
+        return _pack_table(tbl.drop_columns([chunk_col]), offset)
 
-    return chunked.groupBy(part_col, chunk_col).applyInPandas(_pack_chunk, schema=out_schema)
+    return chunked.groupBy(part_col, chunk_col).applyInArrow(_pack_chunk, schema=out_schema)
 
 
 def chunk_documents(

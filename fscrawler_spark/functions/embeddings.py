@@ -770,33 +770,37 @@ def semantic_pairs(
     thr = float(threshold)
     cap = None if max_cell is None else int(max_cell)
 
-    def _cell_pairs(pdf):
+    def _cell_pairs(tbl):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        empty = pd.DataFrame(
-            {"id_a": pdf["id"][:0], "id_b": pdf["id"][:0],
-             "sim": pd.Series([], dtype="float64")}
-        )
-        if not len(pdf):
+        id_t = tbl.schema.field("id").type
+        schema = pa.schema([("id_a", id_t), ("id_b", id_t), ("sim", pa.float64())])
+        empty = schema.empty_table()
+        n = tbl.num_rows
+        if not n:
             return empty
         # drop zero-norm/NaN vectors with the JVM fold's source-precision
-        # square semantics (docstring), then normalize — BEFORE the cap
-        raw = np.array(
-            pdf["_vn"].to_list(), dtype=np.float32 if src_f32 else np.float64
-        )
+        # square semantics (docstring), then normalize — BEFORE the cap;
+        # null elements flatten to NaN, so their vector drops too
+        flat = pc.list_flatten(tbl.column("_vn")).to_numpy(zero_copy_only=False)
+        raw = flat.astype(np.float32 if src_f32 else np.float64, copy=False)
+        raw = raw.reshape(n, len(flat) // n)
         sq = raw * raw
         good = (sq > 0).any(axis=1) & ~np.isnan(sq).any(axis=1)
+        ids = tbl.column("id")
         if not good.all():
-            pdf = pdf[good]
+            ids = ids.filter(pa.array(good))
             raw = raw[good]
             sq = sq[good]
-        n = len(pdf)
+        n = len(ids)
         if n < 2 or (cap is not None and n > cap):
             return empty
         # sort by id so positional i<j reproduces the join's id_a < id_b
-        order = pdf["id"].to_numpy().argsort(kind="stable")
-        ids = pdf["id"].to_numpy()[order]
+        order = pc.sort_indices(ids).to_numpy()
+        ids = ids.take(order)
+        ids_np = ids.to_numpy()
         m = raw[order].astype(np.float64)
         m /= np.sqrt(sq[order].astype(np.float64).sum(axis=1, keepdims=True))
         out_a, out_b, out_s = [], [], []
@@ -806,23 +810,21 @@ def semantic_pairs(
             hi = min(lo + block, n)
             sims = m[lo:hi] @ m.T  # (hi-lo, n)
             bi, bj = np.nonzero(sims >= thr)
-            keep = (bi + lo < bj) & (ids[bi + lo] != ids[bj])
+            keep = (bi + lo < bj) & (ids_np[bi + lo] != ids_np[bj])
             bi, bj = bi[keep], bj[keep]
             if len(bi):
-                out_a.append(ids[bi + lo])
-                out_b.append(ids[bj])
+                out_a.append(bi + lo)
+                out_b.append(bj)
                 out_s.append(sims[bi, bj])
         if not out_a:
             return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "sim": np.concatenate(out_s).astype("float64"),
-            }
+        return pa.Table.from_arrays(
+            [ids.take(np.concatenate(out_a)), ids.take(np.concatenate(out_b)),
+             pa.array(np.concatenate(out_s), pa.float64())],
+            schema=schema,
         )
 
-    return normed.groupBy("cell").applyInPandas(_cell_pairs, out_schema)
+    return normed.groupBy("cell").applyInArrow(_cell_pairs, out_schema)
 
 
 def semantic_dedup(

@@ -4,7 +4,7 @@ extraction with char-offset spans.
 This is the engine's analog of the reference's Tika integration
 (/root/reference/tika/src/main/java/.../TikaInstance.java:119-268 and
 TikaDocParser.java:113-511), rebuilt as deterministic, stateless pure
-functions so they can run inside Arrow-vectorized pandas UDFs with no
+functions so they can run inside Arrow UDFs with no
 shared state across batches.
 
 Canonical extraction contract (every format):

@@ -33,7 +33,7 @@ exactly:
   session.materialize so the corpus is scanned exactly once), never
   over the corpus. The driver pulls at most ``max_ngrams`` rows via
   Arrow — a bounded model, not a corpus-sized collect.
-- **Scoring is one Arrow-batched pandas UDF** with the model shipped
+- **Scoring is one Arrow UDF** with the model shipped
   as a Spark broadcast (one copy per executor, not per task). Linear,
   stateless, no shuffle: it rides whatever scan partitioning the
   caller already has. Per-char Python dict lookups are the honest cost
@@ -49,14 +49,16 @@ curation.gopher_quality_flags (rule-based) on the quality axis.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa  # module top: arrow_udf type hints must resolve at import
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fscrawler_spark.functions.memo import CappedMemo
 from fscrawler_spark.functions.text_analysis import normalized_text
 from fscrawler_spark.session import materialize, widen_slim
 
@@ -210,29 +212,25 @@ class WordLM:
         return math.exp(-lp / events)
 
 
+def _md5_hash(s: str) -> int:
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
 # Worker-resident gram-hash memo: scoring hashes the SAME grams over and
-# over (Zipf — the common unigrams/bigrams dominate every document), and
-# a hashlib round trip per lookup is the dominant scoring cost. Values
-# are pure functions of the key, so caching cannot change any score;
-# the cap bounds worker RSS (~50 MB at 500k short grams) and a clear()
-# on overflow keeps the hot head resident. Lives at module level so a
-# reused Python worker keeps it across tasks (guide §4.5 pattern).
-_MD5_MEMO: dict[str, int] = {}
-_MD5_MEMO_CAP = 500_000
+# over, and a hashlib round trip per lookup is the dominant scoring cost
+# (memo.py holds the cap policy).
+_MD5_MEMO = CappedMemo(_md5_hash)
 
 
 def _md5_int_py(s: str) -> int:
     """Python twin of dedup._md5_int (first 15 md5 hex chars as int64) —
     the scoring side must hash exactly like the training aggregate."""
-    import hashlib
+    return _MD5_MEMO[s]
 
-    h = _MD5_MEMO.get(s)
-    if h is None:
-        if len(_MD5_MEMO) >= _MD5_MEMO_CAP:
-            _MD5_MEMO.clear()
-        h = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-        _MD5_MEMO[s] = h
-    return h
+
+def _column_dict(tbl, key: str, value: str) -> dict:
+    """{key: value} over two columns of a driver-side Arrow table."""
+    return dict(zip(tbl.column(key).to_pylist(), tbl.column(value).to_pylist()))
 
 
 def train_word_lm(
@@ -280,8 +278,6 @@ def train_word_lm(
     def _count_grams(batches):
         from collections import Counter
 
-        import pyarrow as pa
-
         cnts = [Counter() for _ in range(n_orders)]
 
         def emit():
@@ -328,11 +324,10 @@ def train_word_lm(
         q = counts.filter(F.col("ord") == k)
         if k >= 2 and min_count > 1:
             q = q.filter(F.col("c") >= min_count)
-        # toPandas (Arrow path) instead of collect(): the per-row Row
-        # materialization dominated the 200k-row model pulls (guide §6,
-        # Arrow for driver transfers); values are identical ints
-        pdf = q.orderBy(F.desc("c"), F.asc("h")).limit(max_ngrams).toPandas()
-        dicts.append(dict(zip(pdf["h"].astype(int), pdf["c"].astype(int))))
+        # toArrow instead of collect(): the per-row Row materialization
+        # dominated the 200k-row model pulls; values are identical ints
+        tbl = q.orderBy(F.desc("c"), F.asc("h")).limit(max_ngrams).toArrow()
+        dicts.append(_column_dict(tbl, "h", "c"))
     return WordLM(
         n=n, alpha=alpha, total_tokens=max(int(total or 0), 1), counts=tuple(dicts)
     )
@@ -373,8 +368,6 @@ def train_char_lm(
     def _count_char_grams(batches):
         from collections import Counter
 
-        import pyarrow as pa
-
         cnt: Counter = Counter()
 
         def emit():
@@ -400,13 +393,14 @@ def train_char_lm(
         .groupBy("g")
         .agg(F.sum("c").alias("c"))
     )
-    kept_pdf = (
+    kept = _column_dict(
         counts.filter(F.col("c") >= min_count)
         .orderBy(F.desc("c"), F.asc("g"))
         .limit(max_ngrams)
-        .toPandas()  # Arrow driver transfer — values identical to collect()
+        .toArrow(),  # Arrow driver transfer — values identical to collect()
+        "g",
+        "c",
     )
-    kept = dict(zip(kept_pdf["g"], kept_pdf["c"].astype(int)))
     # TRUE context totals (pre-min_count, pre-cap), restricted to
     # contexts of retained grams via a broadcast semi-join — the model
     # the driver holds is bounded by the cap, not by corpus vocabulary
@@ -418,7 +412,9 @@ def train_char_lm(
             [(g[: n - 1],) for g in kept] or [("",)], "ctx string"
         ).distinct()
     )
-    ctx_pdf = ctx_df.join(F.broadcast(kept_ctx), "ctx", "semi").toPandas()
+    ctx_totals = _column_dict(
+        ctx_df.join(F.broadcast(kept_ctx), "ctx", "semi").toArrow(), "ctx", "tot"
+    )
     vocab = counts.select(
         F.countDistinct(F.substring("g", n, 1)).alias("v")
     ).collect()[0]["v"]
@@ -427,7 +423,7 @@ def train_char_lm(
         add_k=add_k,
         vocab_size=max(int(vocab), 1) + 1,  # +1 <unk> char
         grams=kept,
-        ctx_totals=dict(zip(ctx_pdf["ctx"], ctx_pdf["tot"].astype(int))),
+        ctx_totals=ctx_totals,
     )
 
 
@@ -449,10 +445,10 @@ def add_perplexity(
     df = widen(df)
     bc = df.sparkSession.sparkContext.broadcast(lm)
 
-    @F.pandas_udf("double")
-    def _score(texts: pd.Series) -> pd.Series:
-        model = bc.value
-        return texts.map(model.perplexity).astype("float64")
+    @F.arrow_udf("double")
+    def _score(texts: pa.Array) -> pa.Array:
+        ppl = bc.value.perplexity
+        return pa.array([ppl(t) for t in texts.to_pylist()], pa.float64())
 
     return df.withColumn(out_col, _score(F.col(text_col)))
 

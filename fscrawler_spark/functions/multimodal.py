@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via mapInPandas.
+with typed metadata, processed via mapInArrow.
 
 ``probe_media_headers`` parses container headers only (PNG IHDR, JPEG
 SOF marker walk, GIF logical screen, BMP info header, WEBP
@@ -263,7 +263,7 @@ def probe_media_headers(
     df: DataFrame, header_prefix_bytes: int | None = 65536
 ) -> DataFrame:
     """REAL (no library, any environment) media metadata extraction:
-    mapInPandas over binary payloads parsing container headers only —
+    mapInArrow over binary payloads parsing container headers only —
     PNG/JPEG/GIF/BMP/WEBP/TIFF dimensions + channels + bit depth, WAV
     channel/rate/duration. Unrecognized payloads get
     decode_error='unrecognized_container' and NULL metadata, never a
@@ -301,28 +301,22 @@ def probe_media_headers(
         )
 
     def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            rows = {k.name: [] for k in PROBE_SCHEMA.fields}
+        types = {"string": pa.string(), "integer": pa.int32()}
+        schema = pa.schema([(f.name, types[f.dataType.typeName()]) for f in PROBE_SCHEMA.fields])
+        for b in batches:
+            rows = []
             for mid, kind, flen, p in zip(
-                pdf["media_id"], pdf["kind"], pdf["_full_len"], pdf["payload"]
+                *(b.column(c).to_pylist() for c in ("media_id", "kind", "_full_len", "payload"))
             ):
-                b = bytes(p) if p is not None else b""
-                info = probe_media_header(b)
-                rows["media_id"].append(mid)
-                rows["kind"].append(kind)
-                rows["byte_len"].append(0 if pd.isna(flen) else int(flen))
-                rows["mime"].append(info["mime"] if info else None)
-                for f in ("width", "height", "channels", "bit_depth",
-                          "sample_rate", "duration_ms"):
-                    rows[f].append(info.get(f) if info else None)
-                rows["decode_error"].append(
-                    None if info else "unrecognized_container"
-                )
-            yield pd.DataFrame(rows)
+                # schema fields the probe did not fill come back null
+                info = probe_media_header(p or b"") or {}
+                rows.append({**info, "media_id": mid, "kind": kind, "byte_len": flen or 0,
+                             "decode_error": None if info else "unrecognized_container"})
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return src.mapInPandas(gen, PROBE_SCHEMA)
+    return src.mapInArrow(gen, PROBE_SCHEMA)
 
 
 def _synth_png(width: int, height: int) -> bytes:
@@ -368,11 +362,13 @@ def media_probe_fixture(df: DataFrame) -> DataFrame:
     can value-check the whole probe→metadata path (q_media_features)."""
 
     def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
+        schema = pa.schema([("media_id", pa.string()), ("kind", pa.string()),
+                            ("payload", pa.binary())])
+        for b in batches:
             out = {"media_id": [], "kind": [], "payload": []}
-            for did in pdf["doc_id"]:
+            for did in b.column(0).to_pylist():
                 i = int(did)
                 k = ("image", "audio", "video")[i % 3]
                 if k == "image":
@@ -384,8 +380,8 @@ def media_probe_fixture(df: DataFrame) -> DataFrame:
                 out["media_id"].append(str(i))
                 out["kind"].append(k)
                 out["payload"].append(p)
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return df.select("doc_id").mapInPandas(
+    return df.select("doc_id").mapInArrow(
         gen, "media_id string, kind string, payload binary"
     )

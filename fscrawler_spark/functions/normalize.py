@@ -10,7 +10,7 @@ Scale shape:
   of web/code/transcript text is pure ASCII, and ASCII is NFC by
   construction. ASCII rows are detected JVM-side (``rlike`` inside
   whole-stage codegen) and cleaned with a JVM ``regexp_replace``; the
-  pandas UDF receives **NULL** for those rows, so the Arrow exchange
+  Arrow UDF receives **NULL** for those rows, so the Arrow exchange
   ships a null bitmap instead of the string payload and per-row Python
   work only touches the non-ASCII minority.
 - **One Arrow-batched UDF, stateless, no shuffle** for the non-ASCII
@@ -32,7 +32,7 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
+import pyarrow as pa  # module top: arrow_udf type hints must resolve at import
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -147,15 +147,18 @@ def _clean_nonascii_py(s: str | None, fix_mojibake: bool) -> str | None:
 def clean_text(text: Column, fix_mojibake: bool = True) -> Column:
     """Normalized-text column: NFC + control-char strip, with optional
     mojibake repair. ASCII rows never reach Python (see module doc);
-    non-ASCII rows go through one Arrow-batched pandas UDF."""
+    non-ASCII rows go through one Arrow UDF."""
 
-    @F.pandas_udf("string")
-    def _clean(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf("string")
+    def _clean(texts: pa.Array) -> pa.Array:
         # nulls here are either true nulls or ASCII-fast-path masks;
-        # pandas skips them at C speed either way
-        return texts.map(
-            lambda s: _clean_nonascii_py(s, fix_mojibake),
-            na_action="ignore",
+        # both stay null without a Python call
+        return pa.array(
+            [
+                None if s is None else _clean_nonascii_py(s, fix_mojibake)
+                for s in texts.to_pylist()
+            ],
+            pa.string(),
         )
 
     ascii_clean = F.regexp_replace(text, ASCII_CONTROL_CLASS, "")

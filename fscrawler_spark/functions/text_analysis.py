@@ -2,14 +2,14 @@
 language ID, quality scoring, token counting, fingerprinting.
 
 Everything here is a JVM-side column expression (whole-stage codegen,
-no Python boundary) except the n-gram language-ID model, which is a
-vectorized pandas UDF over precomputed profiles. Each helper has an
+no Python boundary) except the n-gram language-ID model, which is an
+Arrow UDF over precomputed profiles. Each helper has an
 ANSI-SQL twin used by the DuckDB oracle in __spark_entry__.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa  # module top: arrow_udf type hints must resolve at import
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -85,7 +85,7 @@ def normalized_text(text: Column) -> Column:
 
 
 def langid_udf():
-    """Character-trigram cosine language ID as a vectorized pandas UDF —
+    """Character-trigram cosine language ID as an Arrow UDF —
     the T9 analog (TikaDocParser.java:336-355 Optimaize detector)."""
     profiles = {
         "en": "the and ing ion to of in is it that for was with as his on be at by",
@@ -101,10 +101,10 @@ def langid_udf():
 
     prof_tris = {k: trigrams(v) for k, v in profiles.items()}
 
-    @F.pandas_udf("string")
-    def _langid(text: pd.Series) -> pd.Series:
+    @F.arrow_udf("string")
+    def _langid(text: pa.Array) -> pa.Array:
         out = []
-        for t in text:
+        for t in text.to_pylist():
             if not t:
                 out.append("und")
                 continue
@@ -120,6 +120,6 @@ def langid_udf():
                 if score > best_score:
                     best, best_score = lang, score
             out.append(best)
-        return pd.Series(out)
+        return pa.array(out, pa.string())
 
     return _langid

@@ -4,8 +4,8 @@ One Arrow-native UDF does the whole T1→T4/T13/T14 dispatch per batch
 (SURVEY §2.4): input arrives as a pyarrow string array and the result
 struct array (mime, extracted, spans, error) is built directly with
 pyarrow builders — no pandas materialization on either side, measured
-~10% faster end-to-end than the pandas_udf path and allocation-free on
-the return side.
+~10% faster end-to-end than the former pandas UDF and allocation-free
+on the return side.
 
 Batch size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch
 (session.py). No state is shared across batches — determinism across
@@ -117,7 +117,8 @@ def limit_for(settings: ExtractSettings, t: str | None) -> int:
 # transcript corpora repeat system prompts / tool boilerplate massively
 # (the dedupe path measured 3.4x on a 4x-duplicated batch); an
 # all-unique batch pays only the ~1.4us/turn probe+encode and falls
-# through to the direct path.
+# through to the direct path. Output is byte-identical either way
+# (extract is a pure function of (text, settings)).
 _DEDUPE_PROBE_ROWS = 2048
 _DEDUPE_MIN_BATCH = 1024
 
@@ -129,11 +130,10 @@ def make_extract_udf(settings: ExtractSettings):
     executor) — the per-job parser isolation analog of
     TikaInstance.java:66-117.
     """
-    dedupe = settings.dedupe_turns
 
     @F.arrow_udf(EXTRACT_TYPE)
     def extract_udf(text: pa.Array) -> pa.Array:
-        if dedupe and len(text) >= _DEDUPE_MIN_BATCH:
+        if len(text) >= _DEDUPE_MIN_BATCH:
             plen = min(len(text), _DEDUPE_PROBE_ROWS)
             probe = text.slice(0, plen).dictionary_encode()
             if len(probe.dictionary) <= plen - plen // 8:

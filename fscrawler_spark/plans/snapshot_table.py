@@ -191,42 +191,37 @@ def _collect_entries(
     reads fanned out over the cluster (at 800k files this is the only
     non-driver-side step of a commit). The collect is bounded — manifest
     metadata, one small row per file."""
-    import pandas as pd
-
     cols = list(stat_cols)
-    abs_root = root
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for rel in pdf["rel"]:
-                ap = os.path.join(abs_root, rel)
-                nrows, stats = _footer_stats(ap, cols)
-                rows.append(
-                    {
-                        "rel": rel,
-                        "length": os.path.getsize(ap),
-                        "rows": nrows,
-                        "stats": json.dumps(stats),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["rel", "length", "rows", "stats"])
+    def entry(rel: str) -> FileEntry:
+        ap = os.path.join(root, rel)
+        nrows, stats = _footer_stats(ap, cols)
+        return FileEntry(rel, os.path.getsize(ap), nrows, stats)
 
-    if not rel_paths:
-        return []
     if len(rel_paths) <= 16:
         # tiny commits: a driver loop beats a Spark job's scheduling cost
-        out = []
-        for rel in rel_paths:
-            ap = os.path.join(abs_root, rel)
-            nrows, stats = _footer_stats(ap, cols)
-            out.append(FileEntry(rel, os.path.getsize(ap), nrows, stats))
-        return out
-    pdf = spark.createDataFrame([(p,) for p in rel_paths], "rel string")
+        return [entry(rel) for rel in rel_paths]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            es = [entry(rel) for rel in b.column(0).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([e.path for e in es], pa.string()),
+                    pa.array([e.length for e in es], pa.int64()),
+                    pa.array([e.rows for e in es], pa.int64()),
+                    pa.array([json.dumps(e.stats) for e in es], pa.string()),
+                ],
+                ["rel", "length", "rows", "stats"],
+            )
+
+    paths_df = spark.createDataFrame([(p,) for p in rel_paths], "rel string")
     n_parts = min(len(rel_paths), spark.sparkContext.defaultParallelism)
     rows = (
-        pdf.repartition(n_parts)
-        .mapInPandas(gen, "rel string, length long, rows long, stats string")
+        paths_df.repartition(n_parts)
+        .mapInArrow(gen, "rel string, length long, rows long, stats string")
         .collect()
     )
     by_rel = {r["rel"]: r for r in rows}
@@ -964,7 +959,6 @@ class SnapshotTable:
             "operation",
             "schema",
             "files",
-            "streams",
             "table_uuid",
         }
     )
@@ -1017,21 +1011,6 @@ class SnapshotTable:
         manifest["table_uuid"] = (
             (parent_m or {}).get("table_uuid") or uuid.uuid4().hex
         )
-        # per-stream committed-epoch high-water marks carry forward through
-        # EVERY commit (Iceberg keeps its streaming watermarks in snapshot
-        # summary properties the same way): the CURRENT manifest therefore
-        # always holds them, so expire_unreferenced() dropping an old
-        # streaming append can never erase its exactly-once dedup record —
-        # a replayed epoch is skipped off this map, not off a scan of
-        # (possibly expired) historical manifests.
-        streams: dict = {}
-        if parent_m is not None:
-            streams.update(parent_m.get("streams") or {})
-        if extra and extra.get("stream_id") is not None and extra.get("epoch_id") is not None:
-            sid = str(extra["stream_id"])
-            streams[sid] = max(int(extra["epoch_id"]), int(streams.get(sid, -1)))
-        if streams:
-            manifest["streams"] = streams
         os.makedirs(self.snap_dir, exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=self.snap_dir, prefix=".tmp-")
         try:
@@ -1194,7 +1173,7 @@ class SnapshotTable:
             if self.snapshot_ids():
                 parent = self.current_id()
                 # ONE parse per attempt: file list, schema, and _commit's
-                # streams/table_uuid carry-forward all come off this dict
+                # table_uuid carry-forward all come off this dict
                 parent_m = self.manifest(parent)
                 base = [FileEntry.from_dict(d) for d in parent_m["files"]]
                 schema_json = self._evolve_schema(parent_m["schema"], df, "append")

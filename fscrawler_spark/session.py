@@ -5,7 +5,7 @@ chosen to also be the right ones at 1000-executor scale:
 
 * AQE on (runtime coalesce + skew-join splitting) — the scale answer to
   mega-conversation skew alongside explicit salting (SURVEY §4).
-* Arrow batches bounded so a pandas-UDF batch of ~100KB-payload turns
+* Arrow batches bounded so a Python-UDF batch of ~100KB-payload turns
   stays well inside executor memory (the reference's 64KB spool threshold
   analog, TikaDocParser.java:93).
 * shuffle partitions sized to cores locally; on a real cluster AQE

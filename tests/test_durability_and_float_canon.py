@@ -4,6 +4,9 @@
   that picks a reliable checkpoint (checkpoint dir set) over an
   executor-local one; a direct .localCheckpoint()/.checkpoint() call
   elsewhere in the package would bypass it.
+- Rows cross the Python boundary as Arrow batches only: no package
+  module imports pandas or calls a pandas UDF/map/collect form, so there
+  is one null model (pandas would turn a nullable bigint into float64).
 - The keyed changelog compares rows by hash; -0.0 == 0.0 in SQL but
   serializes apart, so float/double hash inputs are canonicalized."""
 
@@ -34,6 +37,27 @@ def test_only_session_checkpoints():
             ):
                 offenders.append(f"{path.relative_to(PKG)}:{node.func.end_lineno}")
     assert offenders == [], f"use session.materialize instead: {offenders}"
+
+
+PANDAS_BOUNDARY = ("pandas_udf", "mapInPandas", "applyInPandas", "toPandas")
+
+
+def test_python_boundary_is_arrow_only():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Call):
+                f = node.func
+                names = [f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")]
+            else:
+                continue
+            if any(n.split(".")[0] == "pandas" or n in PANDAS_BOUNDARY for n in names):
+                offenders.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert offenders == [], f"use the Arrow form (arrow_udf/mapInArrow/applyInArrow/toArrow): {offenders}"
 
 
 @pytest.mark.parametrize(

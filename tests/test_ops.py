@@ -3,7 +3,6 @@ the streaming job."""
 
 import os
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from fscrawler_spark.functions import dedup, embeddings, text_analysis

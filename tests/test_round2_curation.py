@@ -198,7 +198,23 @@ def test_pack_sequences_single_shuffle(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1  # only the part_col shuffle
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
+
+
+@pytest.mark.parametrize("max_group_rows", [None, 2])
+def test_pack_sequences_keeps_nullable_bigints_exact(spark, max_group_rows):
+    """Passthrough columns cross the Python boundary as Arrow, so a
+    nullable bigint above 2^53 comes back exact (a float64 round trip
+    would turn 2^53+1 into 2^53)."""
+    big = [2**53 + 1, None, 2**53 + 3]
+    df = spark.createDataFrame(
+        [("a", i, 10, v) for i, v in enumerate(big)],
+        "src string, i int, tok long, v bigint",
+    )
+    out = curation.pack_sequences(
+        df, "tok", 100, "src", ("i",), max_group_rows=max_group_rows
+    )
+    assert [r["v"] for r in out.orderBy("i").collect()] == big
 
 
 def test_contamination_finds_lifted_window(spark):

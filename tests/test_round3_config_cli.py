@@ -26,7 +26,6 @@ from fscrawler_spark.config import ExtractSettings
         {"indexed_chars_percent": -0.3},
         {"indexed_chars_percent": 1.5},
         {"ignore_above": -1},
-        {"arrow_batch_rows": 0},
         {"max_wave_retries": -1},
         {"checkpoint_waves": 0},
     ],

@@ -209,7 +209,7 @@ def test_encode_plan_no_shuffle(spark):
         .toString()
     )
     assert "Exchange" not in plan  # encoding rides the scan partitioning
-    assert "ArrowEvalPython" in plan  # pandas UDF, not row-at-a-time
+    assert "ArrowEvalPython" in plan  # Arrow UDF, not row-at-a-time
 
 
 # --- property tests (driver-side pure functions; no Spark per example) ------

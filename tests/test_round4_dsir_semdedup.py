@@ -410,7 +410,7 @@ def test_semantic_pairs_drop_broken_vectors_before_join(spark):
     # cell-keyed exchange
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "transform(" not in plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_new_ops_are_partitioning_stable(spark, sem_df, dsir):

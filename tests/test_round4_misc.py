@@ -7,7 +7,6 @@ import urllib.error
 import urllib.request
 
 import pytest
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings

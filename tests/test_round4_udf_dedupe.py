@@ -1,15 +1,21 @@
 """Round 4: adaptive in-batch memoization of identical turn texts
-(ExtractSettings.dedupe_turns — udfs.make_extract_udf probes each Arrow
-batch and extracts only the unique texts when duplication shows up).
-The invariant under test: output is BYTE-IDENTICAL to the direct path
-for any mix of mimes, nulls, and duplication levels."""
+(udfs.make_extract_udf probes each Arrow batch and extracts only the
+unique texts when duplication shows up). The invariant under test:
+output is BYTE-IDENTICAL to the direct path — build_extract_batch over
+per-row extract — for any mix of mimes, nulls, and duplication levels."""
 
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from fscrawler_spark.config import ExtractSettings
-from fscrawler_spark.functions.udfs import _DEDUPE_MIN_BATCH, make_extract_udf
+from fscrawler_spark.functions.extractors import extract
+from fscrawler_spark.functions.udfs import (
+    _DEDUPE_MIN_BATCH,
+    build_extract_batch,
+    limit_for,
+    make_extract_udf,
+)
 from fscrawler_spark.operators.extract import extract_transcripts
 
 HTML = "<html><head><title>T</title></head><body><p>kept body text</p></body></html>"
@@ -24,6 +30,13 @@ def _raw(settings: ExtractSettings):
     return make_extract_udf(settings).func
 
 
+def _direct(settings: ExtractSettings):
+    """The reference: every row extracted on its own, no memoization."""
+    return lambda arr: build_extract_batch(
+        ((t, extract(t, limit_for(settings, t))) for t in arr.to_pylist()), settings
+    )
+
+
 def _rows(texts):
     return pa.array(texts, pa.string())
 
@@ -33,7 +46,7 @@ def test_dedupe_path_matches_direct_on_duplicate_heavy_batch():
     texts = base * ((_DEDUPE_MIN_BATCH * 2) // len(base) + 1)
     arr = _rows(texts)
     out_dedupe = _raw(ExtractSettings())(arr)
-    out_direct = _raw(ExtractSettings(dedupe_turns=False))(arr)
+    out_direct = _direct(ExtractSettings())(arr)
     assert out_dedupe.to_pylist() == out_direct.to_pylist()
     # null text must still yield the non-null None-extract struct
     i_null = texts.index(None)
@@ -46,7 +59,7 @@ def test_dedupe_path_matches_direct_on_unique_batch():
     arr = _rows(texts)
     assert (
         _raw(ExtractSettings())(arr).to_pylist()
-        == _raw(ExtractSettings(dedupe_turns=False))(arr).to_pylist()
+        == _direct(ExtractSettings())(arr).to_pylist()
     )
 
 
@@ -55,22 +68,21 @@ def test_small_batches_skip_the_probe():
     arr = _rows(texts)
     assert (
         _raw(ExtractSettings())(arr).to_pylist()
-        == _raw(ExtractSettings(dedupe_turns=False))(arr).to_pylist()
+        == _direct(ExtractSettings())(arr).to_pylist()
     )
 
 
 def test_raw_metadata_and_object_ride_through_dedupe():
     texts = [JSON_DOC, XML, HTML, None] * (_DEDUPE_MIN_BATCH // 2)
     arr = _rows(texts)
-    s_on = ExtractSettings(raw_metadata=True, parse_object=True)
-    s_off = ExtractSettings(raw_metadata=True, parse_object=True, dedupe_turns=False)
-    assert _raw(s_on)(arr).to_pylist() == _raw(s_off)(arr).to_pylist()
+    s = ExtractSettings(raw_metadata=True, parse_object=True)
+    assert _raw(s)(arr).to_pylist() == _direct(s)(arr).to_pylist()
 
 
 @pytest.mark.parametrize("dup_factor", [1, 6])
 def test_spark_e2e_equality_across_paths(spark, tmp_path, dup_factor):
-    """Through real Spark batching: extract_transcripts output must not
-    depend on dedupe_turns at any duplication level."""
+    """Through real Spark batching: every extract_transcripts row equals
+    the direct per-row extract of its text at any duplication level."""
     rows = []
     for c in range(60):
         for t in range(dup_factor):
@@ -78,10 +90,18 @@ def test_spark_e2e_equality_across_paths(spark, tmp_path, dup_factor):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     ).withColumn("ts", F.lit("2026-01-01T00:00:00Z").cast("timestamp"))
-    a = extract_transcripts(df, ExtractSettings(num_buckets=4))
-    b = extract_transcripts(df, ExtractSettings(num_buckets=4, dedupe_turns=False))
+    settings = ExtractSettings(num_buckets=4)
     key = ["conv_id", "turn_idx"]
-    ra = [r.asDict(recursive=True) for r in a.orderBy(*key).collect()]
-    rb = [r.asDict(recursive=True) for r in b.orderBy(*key).collect()]
-    # indexing_date differs run-to-run only via the default arg (same here)
-    assert ra == rb
+    got = [
+        r.asDict(recursive=True)
+        for r in extract_transcripts(df, settings)
+        .select(*key, "mime", "extracted", "spans", "error")
+        .orderBy(*key)
+        .collect()
+    ]
+    rows.sort(key=lambda r: (r[0], r[1]))
+    ref = _direct(settings)(_rows([r[3] for r in rows])).to_pylist()
+    assert got == [
+        {"conv_id": r[0], "turn_idx": r[1], **{k: x[k] for k in ("mime", "extracted", "spans", "error")}}
+        for r, x in zip(rows, ref)
+    ]

@@ -17,7 +17,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from fscrawler_spark.functions.assembly import sft_examples
 from fscrawler_spark.functions.curation import fuzzy_decontaminate

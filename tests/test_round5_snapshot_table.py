@@ -271,7 +271,7 @@ def test_expire_unreferenced(spark, tmp_path):
 
 
 def test_distributed_stats_collection(spark, tmp_path):
-    # >16 files routes stats collection through the mapInPandas path
+    # >16 files routes stats collection through the mapInArrow path
     t = SnapshotTable(str(tmp_path / "t"))
     df = _df(spark, _rows("a", 0, 200)).repartition(20)
     t.overwrite(spark, df)

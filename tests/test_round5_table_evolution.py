@@ -9,10 +9,7 @@ import os
 
 import pytest
 
-from fscrawler_spark.plans.snapshot_table import (
-    CommitConflictError,
-    SnapshotTable,
-)
+from fscrawler_spark.plans.snapshot_table import SnapshotTable
 from fscrawler_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 

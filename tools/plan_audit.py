@@ -64,7 +64,7 @@ def audit(df) -> dict:
         # where Python runs: Arrow-batched UDF evals / grouped maps —
         # everything else is JVM-side (codegen-eligible operators)
         "python_boundaries": len(
-            re.findall(r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas", plan)
+            re.findall(r"ArrowEvalPython|FlatMapGroupsInArrow|MapInArrow", plan)
         ),
         "pushed_lines": [
             ln.strip() for ln in formatted.splitlines() if "PushedFilters" in ln and "[]" not in ln
